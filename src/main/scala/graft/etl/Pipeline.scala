@@ -16,8 +16,17 @@ import org.apache.spark.sql.functions._
   * adds zero rows. Dim, promo-grain, and feature tables rebuild each
   * cycle but read only seed catalogs or the maintained daily-grain
   * aggregates, never event-grain history.
+  *
+  * Stages run in order (bronze→silver, gate, gold, maintain, report):
+  * each reads what the one before wrote, and compaction rewrites the
+  * bronze partitions the report scans. Inside a stage the independent
+  * table builds overlap — the four silver domains, the gold phases'
+  * builds, the four compactions — each on its own thread, so one table's
+  * driver-side analysis, planning and codegen runs while another's tasks
+  * hold the cores. No two of them write the same table root.
   */
 final class Pipeline(wh: Warehouse) {
+  import Pipeline.concurrently
 
   private def spark: SparkSession = wh.spark
 
@@ -87,18 +96,23 @@ final class Pipeline(wh: Warehouse) {
     * in the S12 sense. Persisted (not returned in memory) so a crash, or
     * callers running the stages separately, never lose dates: the gold
     * build consumes the table and drops it.
+    *
+    * Each domain appends under its own `domain=<name>` directory: the
+    * domains run concurrently, and concurrent appends to one table root
+    * share its `_temporary` directory, whose cleanup by the first
+    * committer deletes the others' files. Partition discovery reads the
+    * directories back as one table with a `domain` column.
     */
   private val pendingTable = "gold_pending_dates"
 
   private def recordPendingDates(domain: String, dates: Seq[java.sql.Date]): Unit =
     if (dates.nonEmpty) {
-      val rows = dates.map(d => org.apache.spark.sql.Row(domain, d))
+      val rows = dates.map(d => org.apache.spark.sql.Row(d))
       val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("domain", org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("date", org.apache.spark.sql.types.DateType)))
-      wh.append(
-        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema),
-        "silver", pendingTable)
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+        .write.mode("append")
+        .parquet(s"${wh.path("silver", pendingTable)}/domain=$domain")
     }
 
   /** Pending gold-rebuild dates per domain, consumed by the gold stage. */
@@ -115,19 +129,27 @@ final class Pipeline(wh: Warehouse) {
 
   /** G1 stage 2 — Bronze→Silver with ledger-based incrementality and
     * late-data reconciliation. Every touched date partition is recorded
-    * in the pending-dates table for the partition-scoped gold build.
+    * in the pending-dates table for the partition-scoped gold build. The
+    * four domains run concurrently; the late-inventory reconcile follows
+    * the inventory domain on its thread.
     */
-  def bronzeToSilver(): Unit = {
-    runDomain("sales_events", "event_id", BronzeToSilver.sales)
-    runDomain("inventory_updates", "update_id", BronzeToSilver.inventory)
-    runDomain("equipment_metrics", "metric_id", BronzeToSilver.equipment)
-    runDomain("feedback", "feedback_id", BronzeToSilver.feedback,
-      bronzeTable = "customer_feedback")
-    // T5: reconcile late-arriving inventory into silver, newest wins.
-    // Bounded: only candidates STRICTLY NEWER than their silver version
-    // survive (version probe against silver's key projection), and only
-    // the date partitions those rows touch are merged and dynamically
-    // overwritten — O(late batch) work per cycle, not O(full history).
+  def bronzeToSilver(): Unit = concurrently(
+    () => runDomain("sales_events", "event_id", BronzeToSilver.sales),
+    () => {
+      runDomain("inventory_updates", "update_id", BronzeToSilver.inventory)
+      reconcileLateInventory()
+    },
+    () => runDomain("equipment_metrics", "metric_id", BronzeToSilver.equipment),
+    () => runDomain("feedback", "feedback_id", BronzeToSilver.feedback,
+      bronzeTable = "customer_feedback"))
+
+  /** T5: reconcile late-arriving inventory into silver, newest wins.
+    * Bounded: only candidates STRICTLY NEWER than their silver version
+    * survive (version probe against silver's key projection), and only
+    * the date partitions those rows touch are merged and dynamically
+    * overwritten — O(late batch) work per cycle, not O(full history).
+    */
+  private def reconcileLateInventory(): Unit = {
     val silverInv = wh.load("silver", "inventory_updates")
     val newer = BronzeToSilver
       .inventory(wh.load("bronze", "inventory_updates"))
@@ -184,7 +206,6 @@ final class Pipeline(wh: Warehouse) {
             scoped, batch.select(silver.columns.map(col).toSeq: _*), Seq(keyCol))
           wh.overwrite(merged, "silver", name)
         } else wh.overwrite(batch, "silver", name)
-        wh.append(StatusLedger.markProcessed(batch, keyCol), "silver", ledgerPath)
         recordPendingDates(name, batchDates)
         // maintained quality state: per-date (decimal score sum, count)
         // from the just-rewritten sales partitions, so the quality gate
@@ -207,6 +228,9 @@ final class Pipeline(wh: Warehouse) {
               count(lit(1)).as("n")),
             "silver", "agg_quality_daily")
         }
+        // last write: until the ledger records the batch, a crash leaves
+        // it pending, and the re-run's merge is insert-only on the key
+        wh.append(StatusLedger.markProcessed(batch, keyCol), "silver", ledgerPath)
       }
     } finally batch.unpersist(false)
   }
@@ -277,123 +301,134 @@ final class Pipeline(wh: Warehouse) {
         if (dates.isEmpty) None else Some(df.where(col("date").isin(dates: _*)))
     }
 
-    val dimProduct = SilverToGold.dimProduct(spark,
-      if (wh.exists("gold", "dim_product")) Some(wh.load("gold", "dim_product")) else None)
-    wh.overwrite(dimProduct, "gold", "dim_product")
+    // three phases; inside each the builds read only tables an earlier
+    // phase wrote, so they overlap
+    concurrently(
+      () => wh.overwrite(SilverToGold.dimProduct(spark,
+          if (wh.exists("gold", "dim_product")) Some(wh.load("gold", "dim_product")) else None),
+        "gold", "dim_product"),
+      () => wh.overwrite(SilverToGold.dimStoreScd2(spark,
+          if (wh.exists("gold", "dim_store")) Some(wh.load("gold", "dim_store")) else None, asOf),
+        "gold", "dim_store"),
+      // last-7-days filter inside: partition-pruned, bounded at any scale
+      () => wh.overwrite(SilverToGold.dimPricingScd2(silverSales,
+          if (wh.exists("gold", "dim_pricing")) Some(wh.load("gold", "dim_pricing")) else None,
+          asOf),
+        "gold", "dim_pricing"),
+      () => wh.overwrite(SilverToGold.dimEquipment(spark), "gold", "dim_equipment"),
+      () => calendarBounds(silverSales, pending).foreach { case (minD, maxD) =>
+        wh.overwrite(SilverToGold.dimCalendar(spark, minD, maxD), "gold", "dim_calendar")
+      },
+      () => if (wh.exists("bronze", "weather_data"))
+        wh.overwrite(SilverToGold.dimWeather(wh.load("bronze", "weather_data")),
+          "gold", "dim_weather"),
+      () => wh.overwrite(Generators.marketingEvents(spark, 12), "gold", "dim_marketing_events"))
 
-    val dimStore = SilverToGold.dimStoreScd2(spark,
-      if (wh.exists("gold", "dim_store")) Some(wh.load("gold", "dim_store")) else None, asOf)
-    wh.overwrite(dimStore, "gold", "dim_store")
-
-    // last-7-days filter inside: partition-pruned, bounded at any scale
-    val dimPricing = SilverToGold.dimPricingScd2(silverSales,
-      if (wh.exists("gold", "dim_pricing")) Some(wh.load("gold", "dim_pricing")) else None, asOf)
-    wh.overwrite(dimPricing, "gold", "dim_pricing")
-    wh.overwrite(SilverToGold.dimEquipment(spark), "gold", "dim_equipment")
-
-    // calendar spine bounds: full path scans silver min/max; incremental
-    // path extends the existing spine with the delta dates (no scan)
-    val calendarBounds: Option[(String, String)] = pending match {
-      case None =>
-        val r = silverSales.agg(min(col("date")), max(col("date"))).first()
-        Some((r.getDate(0).toString, r.getDate(1).toString))
-      case Some(p) =>
-        val delta = p.getOrElse("sales_events", Nil)
-        val cur =
-          if (!wh.exists("gold", "dim_calendar")) None
-          else {
-            val r = wh.load("gold", "dim_calendar")
-              .agg(min(col("date")), max(col("date"))).first()
-            Some((r.getDate(0), r.getDate(1)))
-          }
-        (cur, delta) match {
-          case (None, Nil)          => None
-          case (None, _)            =>
-            // no existing spine to extend (warehouse predating the
-            // incremental build, or a dropped calendar): the delta's
-            // dates may under-span silver history, so fall back to the
-            // full-path silver min/max scan rather than silently
-            // shrinking dim_calendar vs full-rebuild semantics
-            val r = silverSales.agg(min(col("date")), max(col("date"))).first()
-            Some((r.getDate(0).toString, r.getDate(1).toString))
-          case (Some((lo, hi)), ds) =>
-            val nlo = (ds :+ lo).minBy(_.getTime)
-            val nhi = (ds :+ hi).maxBy(_.getTime)
-            if (nlo == lo && nhi == hi) None // spine already spans the delta
-            else Some((nlo.toString, nhi.toString))
+    concurrently(
+      // sales: fact partitions, then the maintained daily aggregates for
+      // the same partitions (read back pruned from the just-written fact)
+      () => {
+        scoped(silverSales, "sales_events").foreach { s =>
+          // reload after the swap: dimProduct's plan pinned the
+          // PRE-overwrite file listing of gold/dim_product, which no
+          // longer exists
+          wh.overwrite(SilverToGold.factSales(s, wh.load("gold", "dim_product")),
+            "gold", "fact_sales")
+          wh.overwrite(
+            SilverToGold.aggDailySales(scoped(wh.load("gold", "fact_sales"), "sales_events").get),
+            "gold", "agg_daily_sales")
+          wh.overwrite(SilverToGold.aggCustomerDaily(s), "gold", "agg_customer_daily")
         }
-    }
-    calendarBounds.foreach { case (minD, maxD) =>
-      wh.overwrite(SilverToGold.dimCalendar(spark, minD, maxD), "gold", "dim_calendar")
-    }
-    if (wh.exists("bronze", "weather_data"))
-      wh.overwrite(SilverToGold.dimWeather(wh.load("bronze", "weather_data")),
-        "gold", "dim_weather")
-    wh.overwrite(Generators.marketingEvents(spark, 12), "gold", "dim_marketing_events")
-
-    // sales: fact partitions, then the maintained daily aggregates for
-    // the same partitions (read back pruned from the just-written fact)
-    scoped(silverSales, "sales_events").foreach { s =>
-      // reload after the swap: dimProduct's plan pinned the PRE-overwrite
-      // file listing of gold/dim_product, which no longer exists
-      wh.overwrite(SilverToGold.factSales(s, wh.load("gold", "dim_product")),
-        "gold", "fact_sales")
-      wh.overwrite(
-        SilverToGold.aggDailySales(scoped(wh.load("gold", "fact_sales"), "sales_events").get),
-        "gold", "agg_daily_sales")
-      wh.overwrite(SilverToGold.aggCustomerDaily(s), "gold", "agg_customer_daily")
-    }
-    if (wh.exists("gold", "agg_customer_daily"))
-      wh.overwrite(SilverToGold.dimCustomer(wh.load("gold", "agg_customer_daily")),
-        "gold", "dim_customer")
-
-    scoped(wh.load("silver", "inventory_updates"), "inventory_updates").foreach { s =>
-      wh.overwrite(SilverToGold.factInventory(s), "gold", "fact_inventory")
-      wh.overwrite(
-        SilverToGold.aggInventoryDaily(
-          scoped(wh.load("gold", "fact_inventory"), "inventory_updates").get),
-        "gold", "agg_inventory_daily")
-    }
-    scoped(wh.load("silver", "equipment_metrics"), "equipment_metrics").foreach { s =>
-      wh.overwrite(SilverToGold.factEquipment(s), "gold", "fact_equipment_performance")
-    }
-    scoped(wh.load("silver", "feedback"), "feedback").foreach { s =>
-      wh.overwrite(SilverToGold.factCustomerFeedback(s), "gold", "fact_customer_feedback")
-    }
+        if (wh.exists("gold", "agg_customer_daily"))
+          wh.overwrite(SilverToGold.dimCustomer(wh.load("gold", "agg_customer_daily")),
+            "gold", "dim_customer")
+      },
+      () => scoped(wh.load("silver", "inventory_updates"), "inventory_updates").foreach { s =>
+        wh.overwrite(SilverToGold.factInventory(s), "gold", "fact_inventory")
+        wh.overwrite(
+          SilverToGold.aggInventoryDaily(
+            scoped(wh.load("gold", "fact_inventory"), "inventory_updates").get),
+          "gold", "agg_inventory_daily")
+      },
+      () => scoped(wh.load("silver", "equipment_metrics"), "equipment_metrics").foreach { s =>
+        wh.overwrite(SilverToGold.factEquipment(s), "gold", "fact_equipment_performance")
+      },
+      () => scoped(wh.load("silver", "feedback"), "feedback").foreach { s =>
+        wh.overwrite(SilverToGold.factCustomerFeedback(s), "gold", "fact_customer_feedback")
+      })
 
     // promo-grain fact + feature tables: rebuilt whole each cycle, but
     // every history-shaped input is a maintained daily-grain aggregate
-    if (wh.exists("gold", "agg_daily_sales")) {
-      val dailyUnits = wh.load("gold", "agg_daily_sales")
-        .groupBy(col("product_id"), col("date"))
-        .agg(sum(col("daily_units")).as("units"))
-      wh.overwrite(SilverToGold.factPromotions(
-          wh.load("bronze", "promotions"), dailyUnits, asOf),
-        "gold", "fact_promotions")
+    concurrently(
+      () => if (wh.exists("gold", "agg_daily_sales")) {
+        val dailyUnits = wh.load("gold", "agg_daily_sales")
+          .groupBy(col("product_id"), col("date"))
+          .agg(sum(col("daily_units")).as("units"))
+        wh.overwrite(SilverToGold.factPromotions(
+            wh.load("bronze", "promotions"), dailyUnits, asOf),
+          "gold", "fact_promotions")
 
-      wh.overwrite(MlFeatures.productDemand(
-          wh.load("gold", "agg_daily_sales"), wh.load("gold", "fact_promotions"),
-          // degrade like the dim_weather fallback below: a warehouse
-          // whose inventory domain never produced a cycle gets an
-          // empty daily-grain frame, not a missing-path crash
-          if (wh.exists("gold", "agg_inventory_daily"))
-            wh.load("gold", "agg_inventory_daily")
-          else SilverToGold.aggInventoryDaily(SilverToGold.factInventory(
-            BronzeToSilver.inventory(Generators.inventoryUpdates(spark, 0)))),
-          wh.load("gold", "dim_pricing"),
-          wh.load("gold", "dim_calendar"),
-          if (wh.exists("gold", "dim_weather")) wh.load("gold", "dim_weather")
-          else SilverToGold.dimWeather(
-            Generators.weatherData(spark).limit(0))),
-        "gold", "product_demand_features")
-    }
-    // equipment fact is already (equipment, date) grain — compact input
-    if (wh.exists("gold", "fact_equipment_performance"))
-      wh.overwrite(MlFeatures.equipmentHealth(wh.load("gold", "fact_equipment_performance")),
-        "gold", "equipment_health_features")
-    wh.overwrite(MlFeatures.productionBatches(spark,
-      wh.load("gold", "dim_product"), wh.load("gold", "dim_equipment")),
-      "gold", "production_batch_features")
+        wh.overwrite(MlFeatures.productDemand(
+            wh.load("gold", "agg_daily_sales"), wh.load("gold", "fact_promotions"),
+            // degrade like the dim_weather fallback below: a warehouse
+            // whose inventory domain never produced a cycle gets an
+            // empty daily-grain frame, not a missing-path crash
+            if (wh.exists("gold", "agg_inventory_daily"))
+              wh.load("gold", "agg_inventory_daily")
+            else SilverToGold.aggInventoryDaily(SilverToGold.factInventory(
+              BronzeToSilver.inventory(Generators.inventoryUpdates(spark, 0)))),
+            wh.load("gold", "dim_pricing"),
+            wh.load("gold", "dim_calendar"),
+            if (wh.exists("gold", "dim_weather")) wh.load("gold", "dim_weather")
+            else SilverToGold.dimWeather(
+              Generators.weatherData(spark).limit(0))),
+          "gold", "product_demand_features")
+      },
+      // equipment fact is already (equipment, date) grain — compact input
+      () => if (wh.exists("gold", "fact_equipment_performance"))
+        wh.overwrite(MlFeatures.equipmentHealth(wh.load("gold", "fact_equipment_performance")),
+          "gold", "equipment_health_features"),
+      () => wh.overwrite(MlFeatures.productionBatches(spark,
+          wh.load("gold", "dim_product"), wh.load("gold", "dim_equipment")),
+        "gold", "production_batch_features"))
+  }
+
+  /** dim_calendar's spine bounds, or None when the spine needs no
+    * rewrite: the full path scans silver min/max; the incremental path
+    * extends the existing spine with the delta dates (no scan).
+    */
+  private def calendarBounds(
+      silverSales: DataFrame,
+      pending: Option[Map[String, Seq[java.sql.Date]]]
+  ): Option[(String, String)] = pending match {
+    case None =>
+      val r = silverSales.agg(min(col("date")), max(col("date"))).first()
+      Some((r.getDate(0).toString, r.getDate(1).toString))
+    case Some(p) =>
+      val delta = p.getOrElse("sales_events", Nil)
+      val cur =
+        if (!wh.exists("gold", "dim_calendar")) None
+        else {
+          val r = wh.load("gold", "dim_calendar")
+            .agg(min(col("date")), max(col("date"))).first()
+          Some((r.getDate(0), r.getDate(1)))
+        }
+      (cur, delta) match {
+        case (None, Nil)          => None
+        case (None, _)            =>
+          // no existing spine to extend (warehouse predating the
+          // incremental build, or a dropped calendar): the delta's
+          // dates may under-span silver history, so fall back to the
+          // full-path silver min/max scan rather than silently
+          // shrinking dim_calendar vs full-rebuild semantics
+          val r = silverSales.agg(min(col("date")), max(col("date"))).first()
+          Some((r.getDate(0).toString, r.getDate(1).toString))
+        case (Some((lo, hi)), ds) =>
+          val nlo = (ds :+ lo).minBy(_.getTime)
+          val nhi = (ds :+ hi).maxBy(_.getTime)
+          if (nlo == lo && nhi == hi) None // spine already spans the delta
+          else Some((nlo.toString, nhi.toString))
+      }
   }
 
   /** Append a fresh bronze batch (a later producer window) — the entry
@@ -467,10 +502,11 @@ final class Pipeline(wh: Warehouse) {
     val appendTables = Seq(
       "bronze" -> "sales_events", "bronze" -> "inventory_updates",
       "bronze" -> "equipment_metrics", "bronze" -> "customer_feedback")
-    appendTables
+    val files = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
+    concurrently(appendTables
       .filter { case (l, t) => wh.exists(l, t) }
-      .map { case (l, t) => s"$l.$t" -> wh.compact(l, t, targetBytes) }
-      .toMap
+      .map { case (l, t) => () => files(s"$l.$t") = wh.compact(l, t, targetBytes) }: _*)
+    files.toMap
   }
 
   /** Full cycle (G1): ingest → silver → gate → gold → maintain → report.
@@ -483,5 +519,35 @@ final class Pipeline(wh: Warehouse) {
     silverToGoldIncremental(asOf)
     maintain()
     report()
+  }
+}
+
+object Pipeline {
+
+  /** Runs `steps` at once, each on a fresh thread started by the calling
+    * thread, and returns when every one has finished. Fresh threads
+    * inherit the caller's Spark local properties (job group, scheduler
+    * pool, any tag a listener attributes jobs by), which pooled threads
+    * would not. If steps fail, the first failing step's error (in
+    * argument order) is thrown once all have finished, with the other
+    * errors attached as suppressed.
+    */
+  private[etl] def concurrently(steps: (() => Unit)*): Unit = {
+    val errors  = new Array[Throwable](steps.size)
+    val threads = steps.indices.map { i =>
+      val t = new Thread(() =>
+        try steps(i)()
+        catch { case e: Throwable => errors(i) = e },
+        s"${Thread.currentThread.getName}-step-$i")
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    errors.filter(_ != null) match {
+      case Array() =>
+      case Array(first, rest @ _*) =>
+        rest.foreach(first.addSuppressed)
+        throw first
+    }
   }
 }

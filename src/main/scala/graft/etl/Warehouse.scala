@@ -201,21 +201,27 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * object stores). Dynamic partition overwrite has no such hazard: it
     * stages files and only swaps partition contents at job commit.
     */
-  def overwrite(df: DataFrame, layer: String, table: String): Unit = {
+  def overwrite(df: DataFrame, layer: String, table: String): Unit =
+    overwrite(df, layer, table, Map.empty)
+
+  /** [[overwrite]] with per-write writer options. */
+  private def overwrite(
+      df: DataFrame, layer: String, table: String, options: Map[String, String]): Unit = {
     dropCatalogEntry(layer, table)
     val target = new Path(path(layer, table))
+    val w = df.write.options(options).mode("overwrite")
     if (df.columns.contains("date")) {
-      df.write.mode("overwrite").partitionBy("date").parquet(target.toString)
+      w.partitionBy("date").parquet(target.toString)
     } else {
       val filesystem = fs(target)
       if (!filesystem.exists(target)) {
-        df.write.mode("overwrite").parquet(target.toString)
+        w.parquet(target.toString)
       } else {
         val stage = new Path(target.getParent, target.getName + ".__stage__")
         val old   = new Path(target.getParent, target.getName + ".__old__")
         filesystem.delete(stage, true)
         filesystem.delete(old, true)
-        df.write.mode("overwrite").parquet(stage.toString)
+        w.parquet(stage.toString)
         filesystem.rename(target, old)
         filesystem.rename(stage, target)
         filesystem.delete(old, true)
@@ -280,20 +286,14 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     val before = parquetFiles(target)
     val df = load(layer, table)
 
-    def setBudget(bytes: Long, rows: Long): Option[Option[String]] = {
-      // rows-per-file budget from measured density; the writer's
-      // maxRecordsPerFile split is deterministic (ceil(rows / budget)
-      // files per partition dir) where a hash-repartition file count is
-      // at the mercy of AQE coalescing and bucket collisions
+    // rows-per-file budget from measured density; the writer's
+    // maxRecordsPerFile split is deterministic (ceil(rows / budget) files
+    // per partition dir) where a hash-repartition file count is at the
+    // mercy of AQE coalescing and bucket collisions. A per-write option,
+    // not the session conf, so concurrent writers never see it.
+    def budget(bytes: Long, rows: Long): Map[String, String] = {
       val avgRowBytes = math.max(1L, bytes / math.max(1L, rows))
-      val maxRecords  = math.max(1L, targetBytes / avgRowBytes)
-      val prev = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
-      spark.conf.set("spark.sql.files.maxRecordsPerFile", maxRecords.toString)
-      Some(prev)
-    }
-    def restoreBudget(prev: Option[Option[String]]): Unit = prev.foreach {
-      case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
-      case None    => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+      Map("maxRecordsPerFile" -> math.max(1L, targetBytes / avgRowBytes).toString)
     }
 
     if (df.columns.contains("date")) {
@@ -311,17 +311,13 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         val needyDirs  = needyDates.map(d => s"date=$d").toSet
         val needyBytes = byPart.collect { case (dir, fs) if needyDirs(dir) => fs.map(_.getLen).sum }.sum
         val sub        = df.where(col("date").isin(needyDates: _*))
-        val prev       = setBudget(needyBytes, sub.count())
         // one task per needy day (AQE may merge small days — harmless:
         // the writer still splits by partition dir); dynamic partition
         // overwrite swaps ONLY these partitions
-        try overwrite(sub.repartition(col("date")), layer, table)
-        finally restoreBudget(prev)
+        overwrite(sub.repartition(col("date")), layer, table, budget(needyBytes, sub.count()))
       }
     } else {
-      val prev = setBudget(before.map(_.getLen).sum, df.count())
-      try overwrite(df.coalesce(1), layer, table)
-      finally restoreBudget(prev)
+      overwrite(df.coalesce(1), layer, table, budget(before.map(_.getLen).sum, df.count()))
     }
     (before.size.toLong, parquetFiles(target).size.toLong)
   }

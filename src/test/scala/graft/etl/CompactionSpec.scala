@@ -45,7 +45,9 @@ class CompactionSpec extends AnyFunSuite {
     val bytes = new java.io.File(wh.path("bronze", "big") + "/date=2024-02-01")
       .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
     // budget of ~1/3 the partition → ceil gives 3-4 output files
+    val confBefore = spark.conf.getAll
     val (_, after) = wh.compact("bronze", "big", targetBytes = bytes / 3)
+    assert(spark.conf.getAll === confBefore, "compact changed the session conf")
     assert(after >= 3L && after <= 5L, s"expected ~3-4 files, got $after")
     assert(wh.load("bronze", "big").count() === 20000L)
   }

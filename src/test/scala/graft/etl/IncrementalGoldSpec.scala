@@ -252,4 +252,33 @@ class IncrementalGoldSpec extends AnyFunSuite {
     p.silverToGoldIncremental(java.sql.Date.valueOf("2025-06-21"))
     assert(listing(wh, "gold", "fact_sales") === factBefore)
   }
+
+  test("a failed ledger append leaves the batch pending, and its re-run adds no duplicates") {
+    val wh = freshWarehouse()
+    val p  = new Pipeline(wh)
+    p.initBronze(nSales = 500, nInventory = 100, nEquipment = 100, nFeedback = 50)
+    p.bronzeToSilver()
+    p.silverToGoldIncremental(java.sql.Date.valueOf("2025-06-20"))
+    val silverBefore = wh.load("silver", "sales_events").count()
+    p.appendBronzeSales(Generators.salesEvents(spark, 100, days = 1,
+      baseTs = "2025-07-10 00:00:00", idOffset = 7300000L))
+    // a plain file where the ledger append stages its output: that write
+    // fails, every earlier write of the sales domain succeeds
+    val squat = new java.io.File(wh.path("silver", "ledger_sales_events"), "_temporary")
+    assert(squat.createNewFile())
+    intercept[Exception](p.bronzeToSilver())
+    val pending =
+      if (!wh.exists("silver", "gold_pending_dates")) Set.empty[String]
+      else wh.load("silver", "gold_pending_dates")
+        .where(col("domain") === "sales_events")
+        .collect().map(_.getAs[java.sql.Date]("date").toString).toSet
+    assert(pending === Set("2025-07-10"), "the unledgered batch's date must stay pending")
+
+    assert(squat.delete())
+    p.bronzeToSilver()
+    assert(wh.load("silver", "sales_events").count() === silverBefore + 100,
+      "re-running the unledgered batch duplicated silver rows")
+    p.silverToGoldIncremental(java.sql.Date.valueOf("2025-07-11"))
+    assert(wh.load("gold", "fact_sales").count() === silverBefore + 100)
+  }
 }
