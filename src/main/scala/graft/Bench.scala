@@ -1,6 +1,5 @@
 package graft
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.graft.JobMeter
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -10,13 +9,7 @@ object Bench {
     val spark = GraftSession.builder(cpus.toInt).appName("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // per-query shuffle-write attribution so a contended run is diagnosable
-    // (the listener bus is async: the deterministic drain below keeps stage
-    // metrics attributed to the query that produced them)
-    val shuffleWrite = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        shuffleWrite.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = JobMeter(spark.sparkContext)
     // warm up JIT/codegen/parquet paths so the first measured query isn't
     // charged the session's one-time costs
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -69,14 +62,11 @@ object Bench {
         }
         (System.nanoTime() - t0) / 1e9
       }
-      val s0 = shuffleWrite.get
+      meter.reset()
       val sec1 = once()
-      // deterministic listener-bus drain: a fixed sleep undercounts shuffle
-      // attribution on a loaded box
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       // shuffle bytes from run 1 only: bytes are the deterministic regression
       // signal (byte-stable run to run), wall clock is not on this box
-      val bytes = shuffleWrite.get - s0
+      val bytes = meter.read().shuffleWrite
       // min-of-2 wall for cheap queries: the box's contention waves inflate
       // sub-second queries 10-27x (rounds 4/7/8), and a full re-run of a
       // cheap query costs little. Heavy queries (>3 s) are real-work
@@ -86,12 +76,7 @@ object Bench {
       // outlier and the re-run lets it self-heal in the committed file.
       val rerun = sec1 < 3.0 ||
         prior.get(name).exists(p => p < 3.0 || sec1 > 2.0 * p)
-      val sec =
-        if (rerun) {
-          val sec2 = once()
-          org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-          math.min(sec1, sec2)
-        } else sec1
+      val sec = if (rerun) math.min(sec1, once()) else sec1
       (name, sec, sec1, bytes)
     }
     def ms(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)

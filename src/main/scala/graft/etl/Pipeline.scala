@@ -437,29 +437,6 @@ final class Pipeline(wh: Warehouse) {
   def appendBronzeSales(batch: DataFrame): Unit =
     wh.append(batch, "bronze", "sales_events")
 
-  /** Incremental fact build: only silver dates absent from the gold fact
-    * are transformed and appended, so each cycle touches O(new dates)
-    * partitions — the property that keeps a daily 100 TB gold build at
-    * daily-increment cost instead of full-history cost. Returns the
-    * number of appended rows.
-    */
-  def factSalesIncremental(): Long = {
-    val silver     = wh.load("silver", "sales_events")
-    val dimProduct = wh.load("gold", "dim_product")
-    val fresh =
-      if (!wh.exists("gold", "fact_sales")) silver
-      else {
-        val existingDates = wh.load("gold", "fact_sales").select(col("date")).distinct()
-        silver.join(existingDates, Seq("date"), "left_anti")
-      }
-    if (fresh.isEmpty) 0L
-    else {
-      val rows = SilverToGold.factSales(fresh, dimProduct)
-      wh.append(rows, "gold", "fact_sales")
-      rows.count()
-    }
-  }
-
   /** G2/G5 — count report across all layers (bakery_csv_etl_pipeline.py:
     * 380-416).
     */

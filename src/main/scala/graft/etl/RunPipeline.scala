@@ -5,8 +5,10 @@ import graft.GraftSession
 /** CLI entry point for the medallion pipeline (SURVEY.md §7 step 8):
   * seeds bronze with the deterministic generators, runs
   * bronze→silver→gold with the quality gate, prints the count report.
+  * `increment` instead appends a later sales window to an existing
+  * warehouse and runs the same cycle over it.
   *
-  * Usage: runMain graft.etl.RunPipeline <warehouseDir> [nSales]
+  * Usage: runMain graft.etl.RunPipeline <warehouseDir> [nSales | <csv> | increment]
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
@@ -14,26 +16,24 @@ object RunPipeline {
     val spark  = GraftSession.getOrCreate()
     val wh     = new Warehouse(spark, whDir)
     val pipe   = new Pipeline(wh)
-    args.lift(1) match {
+    val seedAsOf = java.sql.Date.valueOf("2025-06-20")
+    val asOf = args.lift(1) match {
       case Some(csv) if csv.endsWith(".csv") =>
         // mirror the reference DAG's backup-before-load order on re-runs
-        pipe.initBronzeFromCsv(csv,
-          backupAsOf = Some(java.sql.Date.valueOf("2025-06-20")))
+        pipe.initBronzeFromCsv(csv, backupAsOf = Some(seedAsOf))
+        seedAsOf
       case Some("increment") =>
-        // a later producer window: append, process deltas, extend the fact
+        // a later producer window (14 days from 2025-07-01): the cycle
+        // processes only its delta, as of the day after the batch
         pipe.appendBronzeSales(
           Generators.salesEvents(spark, 2000, baseTs = "2025-07-01 00:00:00", idOffset = 5000000L))
-        pipe.bronzeToSilver()
-        val added = pipe.factSalesIncremental()
-        println(s"[pipeline] incremental fact_sales rows appended: $added")
-        pipe.report().show(50, truncate = false)
-        spark.stop()
-        return
+        java.sql.Date.valueOf("2025-07-15")
       case other =>
         val nSales = other.map(_.toLong).getOrElse(10000L)
         pipe.initBronze(nSales, nSales / 4, nSales / 2, nSales / 10)
+        seedAsOf
     }
-    val report = pipe.runAll(java.sql.Date.valueOf("2025-06-20"))
+    val report = pipe.runAll(asOf)
     report.show(50, truncate = false)
     println("=== dashboard KPIs (SURVEY §2.12) ===")
     DashboardQueries.revenueKpis(wh.load("gold", "fact_sales")).show(truncate = false)

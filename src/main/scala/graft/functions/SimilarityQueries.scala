@@ -102,15 +102,20 @@ object SimilarityQueries extends QueryModule {
 
   /** [[pinBySize]] with the side's row count already known (vec_id-grain
     * sides are exactly the persisted corpus count the auto-sizing rules
-    * already paid for), so the gate adds no extra count job.
+    * already paid for), so the gate adds no extra count job. The one
+    * row-count broadcast gate: graph node-grain frames and the ALS
+    * purchased pairs pin through it too, the latter with its own cap.
     */
-  private def pinByRows(side: DataFrame, rows: Long): DataFrame = {
-    // overridable so the spec can force the shuffle arm on small data
-    // and prove both arms return identical answers
-    val maxRows = sys.props.get("graft.pin.broadcast.max.rows")
-      .map(_.toLong).getOrElse(250000L)
-    if (rows <= maxRows) broadcast(side) else side.hint("shuffle_hash")
-  }
+  private[graft] def pinByRows(side: DataFrame, rows: Long,
+      cap: Long = pinMaxRows): DataFrame =
+    if (rows <= cap) broadcast(side) else side.hint("shuffle_hash")
+
+  /** The shared broadcast cap for wide rows. Overridable so the spec can
+    * force the shuffle arm on small data and prove both arms return
+    * identical answers.
+    */
+  private[graft] def pinMaxRows: Long =
+    sys.props.get("graft.pin.broadcast.max.rows").map(_.toLong).getOrElse(250000L)
 
   /** Auto-B seed count for the production ANN pairing (q77/q82/q95):
     * the q300 rule B = ceil(n / 32) applied to the SEEDED codebook —

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.functions.SimilarityQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,10 +43,9 @@ object GraphQueries extends QueryModule {
     * (equi-joins with order-free aggregates downstream).
     */
   private[graft] def nodePin(s: SparkSession, d: String): DataFrame => DataFrame = {
-    val maxRows = sys.props.get("graft.pin.broadcast.max.rows")
-      .map(_.toLong).getOrElse(250000L)
+    val cap = SimilarityQueries.pinMaxRows
     val n = supplier(s, d).count()
-    df => if (n <= maxRows) broadcast(df) else df.hint("shuffle_hash")
+    SimilarityQueries.pinByRows(_, n, cap)
   }
 
   /** The one-time co-supply edge build, normalized: distinct (part,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.functions.SimilarityQueries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -409,7 +410,7 @@ object RecommenderQueries extends QueryModule {
       // count off the persisted ratings lease every caller passes
       // (same row count as slim; the job populates/reads the cache
       // instead of planning a second pass over the uncached build)
-      if (rat.count() <= maxRows) broadcast(slim) else slim.hint("shuffle_hash")
+      SimilarityQueries.pinByRows(slim, rat.count(), maxRows)
     }
     userF.repartition(p, col("u")).crossJoin(broadcast(pop))
       .join(purchased, Seq("u", "i"), "left_anti")

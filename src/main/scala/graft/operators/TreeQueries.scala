@@ -64,7 +64,7 @@ object TreeQueries extends QueryModule {
     * (round 14, guide §2.5/§2.6): the sf0.1 parquet scan yields 3
     * input splits, so every cached partition — and with it every one
     * of the 7-30 histogram passes a trainer runs over this frame —
-    * executed on 3 of the 32 local cores (JobProf: 3-task jobs of
+    * executed on 3 of the 32 local cores (per-job profile: 3-task jobs of
     * 0.5-2.1 s each). One keyed exchange of the slim binned projection
     * (~deterministic hash on the (k, ln) row key, no round-robin sort)
     * spreads the cache; the count derives from defaultParallelism, so

@@ -1,8 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
-import java.util.concurrent.atomic.LongAdder
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.graft.JobMeter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -647,23 +646,15 @@ object ScaleTrend {
       dirs: Seq[(String, String)],
       reps: Int,
       only: Set[String] = Set.empty): Unit = {
-    val written = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) written.add(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
+    val meter = JobMeter(spark.sparkContext)
     def measure(name: String, tag: String, thunk: () => Long): (String, String, Double, Long) = {
       val (wall, sh) = (1 to reps).map { _ =>
         spark.catalog.clearCache()
-        org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-        written.reset()
+        meter.reset()
         val t0 = System.nanoTime()
         thunk()
         val w = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-        (w, written.sum())
+        (w, meter.read().shuffleWrite)
       }.minBy(_._1)
       println(f"[scale] $name%-28s $tag%-6s wall=$wall%7.2f s shuffle=${sh / 1e6}%9.3f MB")
       (name, tag, wall, sh)

@@ -2,8 +2,7 @@ package graft.tools
 
 import graft.GraftSession
 import graft.operators.SkewJoin
-import java.util.concurrent.atomic.LongAdder
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.graft.JobMeter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -57,14 +56,7 @@ object SkewTrend {
     // the corpus-scale regime: the vocab-grain model side is NOT
     // broadcastable by assumption
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-    val shuffleWrite = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
+    val meter = JobMeter(spark.sparkContext)
 
     for (skew <- Seq(1L, 10L)) {
       val headRows = 50000L * skew
@@ -77,7 +69,7 @@ object SkewTrend {
               joinType = "left")
           else toks.join(lm, Seq("token"), "left")
         (1 to reps).foreach { rep =>
-          shuffleWrite.reset()
+          meter.reset()
           val t0 = System.nanoTime()
           // the q274 shape downstream of the join: per-doc score fold
           val n = joined()
@@ -91,10 +83,9 @@ object SkewTrend {
             .agg(count(lit(1)).as("rows"))
             .agg(max(col("rows")))
             .head().getLong(0)
-          org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
           println(f"[skew-trend] skew=${skew}x head=$headRows variant=$variant " +
             f"rep=$rep docs=$n wall=$wall%.2f s " +
-            f"shuffleWrite=${shuffleWrite.sum() / 1e6}%.2f MB " +
+            f"shuffleWrite=${meter.read().shuffleWrite / 1e6}%.2f MB " +
             f"maxPartitionRows=$maxPart")
         }
       }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * plan lives on `StreamExecution.lastExecution` (an
   * IncrementalExecution), which is `private[sql]` territory — hence
   * this one-method accessor under the sql package, mirroring
-  * org.apache.spark.graft.ListenerDrain. Used by the broadcast-fallback
+  * org.apache.spark.graft.JobMeter.drain. Used by the broadcast-fallback
   * gates (BroadcastFallbackSpec / PlanAudit) to assert q192's
   * stream-static band join degrades to a keyed SortMergeJoin.
   */

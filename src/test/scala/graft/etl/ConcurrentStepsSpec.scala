@@ -50,7 +50,7 @@ class ConcurrentStepsSpec extends AnyFunSuite {
           ()
         }
       }: _*)
-      org.apache.spark.graft.ListenerDrain.drain(sc)
+      org.apache.spark.graft.JobMeter.drain(sc)
     } finally {
       sc.setLocalProperty(tag, null)
       sc.removeSparkListener(listener)

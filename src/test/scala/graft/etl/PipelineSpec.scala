@@ -111,19 +111,25 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("incremental fact build appends only new-date partitions and is idempotent") {
+    val july   = java.sql.Date.valueOf("2025-07-01")
     val before = wh.load("gold", "fact_sales").count()
+    val oldRows = wh.load("gold", "fact_sales").collect().toSet
     // a later producer window: disjoint event ids AND disjoint dates
     pipeline.appendBronzeSales(
       Generators.salesEvents(spark, 500, baseTs = "2025-07-01 00:00:00", idOffset = 1000000L))
     pipeline.bronzeToSilver() // ledger picks up only the new event ids
-    val added = pipeline.factSalesIncremental()
+    val batch = SilverToGold.factSales(
+      wh.load("silver", "sales_events").where(col("date") >= july),
+      wh.load("gold", "dim_product")).count()
+    val dayAfter = java.sql.Date.valueOf("2025-07-15")
+    pipeline.silverToGoldIncremental(dayAfter)
     val after = wh.load("gold", "fact_sales").count()
-    assert(added > 0 && after == before + added)
-    // old partitions untouched: all pre-existing rows still present
-    assert(wh.load("gold", "fact_sales")
-      .where(col("date") < java.sql.Date.valueOf("2025-07-01")).count() == before)
-    // re-running the increment adds nothing
-    assert(pipeline.factSalesIncremental() == 0L)
+    assert(batch > 0 && after == before + batch)
+    // old partitions untouched: every pre-existing row still present, unchanged
+    val preBatch = wh.load("gold", "fact_sales").where(col("date") < july)
+    assert(preBatch.count() == before && preBatch.collect().toSet == oldRows)
+    // re-running the gold stage adds nothing: the batch's dates were consumed
+    pipeline.silverToGoldIncremental(dayAfter)
     assert(wh.load("gold", "fact_sales").count() == after)
   }
 

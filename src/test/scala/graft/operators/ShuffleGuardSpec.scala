@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.{SparkEntry, TestSpark}
-import java.util.concurrent.atomic.LongAdder
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.graft.JobMeter
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shuffle-byte regression guard for the re-architected hot paths
@@ -44,34 +43,22 @@ class ShuffleGuardSpec extends AnyFunSuite {
 
   test("re-architected hot paths stay under their sf0.1 shuffle-byte ceilings") {
     assume(new java.io.File(dir).isDirectory, s"guard corpus absent: $dir")
-    val written = new LongAdder
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) written.add(m.shuffleWriteMetrics.bytesWritten)
-      }
+    val meter = JobMeter(spark.sparkContext)
+    val overs = ceilingsBytes.flatMap { case (name, cap) =>
+      // min of 2 reps: the PLAN's shuffle cost is the deterministic
+      // floor both reps share; transient inflation (cache eviction /
+      // stage recomputation under this VM's documented contention
+      // waves) lifts a single rep, which min() discards — while a
+      // structural regression lifts every rep and still fails
+      val got = (1 to 2).map { _ =>
+        spark.catalog.clearCache()
+        meter.reset()
+        SparkEntry.queries(name)(spark, dir).count()
+        meter.read().shuffleWrite
+      }.min
+      if (got > cap) Some(f"$name: ${got / 1e6}%.2f MB > ceiling ${cap / 1e6}%.2f MB")
+      else None
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val overs = ceilingsBytes.flatMap { case (name, cap) =>
-        // min of 2 reps: the PLAN's shuffle cost is the deterministic
-        // floor both reps share; transient inflation (cache eviction /
-        // stage recomputation under this VM's documented contention
-        // waves) lifts a single rep, which min() discards — while a
-        // structural regression lifts every rep and still fails
-        val got = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          // drain straggler events from whatever ran before, then zero
-          org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-          written.reset()
-          SparkEntry.queries(name)(spark, dir).count()
-          org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-          written.sum()
-        }.min
-        if (got > cap) Some(f"$name: ${got / 1e6}%.2f MB > ceiling ${cap / 1e6}%.2f MB")
-        else None
-      }
-      assert(overs.isEmpty, overs.mkString("; "))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(overs.isEmpty, overs.mkString("; "))
   }
 }
