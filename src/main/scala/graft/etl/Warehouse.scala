@@ -9,6 +9,18 @@ import org.apache.spark.sql.functions._
   * dynamic partition overwrite, so a MERGE rewrite touches only the
   * partitions the source batch spans — the property that keeps rewrite
   * amplification bounded at 100 TB.
+  *
+  * Write distribution: like an Iceberg table `PARTITIONED BY (date)`
+  * with hash distribution, [[overwrite]] and [[append]] cluster a frame
+  * that carries `date` by it before writing (a `rebalance` hint), so
+  * each write leaves one file per date — AQE merges small dates into
+  * one task and still splits a date above the advisory partition size.
+  * Without it every write task leaves a file in every date it holds.
+  *
+  * Job-free reads: like a read that takes its schema from table
+  * metadata, [[load]] takes the schema Spark recorded in the footer of
+  * the table's first data file and hands it to the reader, so opening a
+  * table runs no schema-inference job.
   */
 final class Warehouse(val spark: SparkSession, val root: String) {
 
@@ -30,7 +42,52 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   def load(layer: String, table: String): DataFrame = {
     val name = catalogName(layer, table)
     if (catalogEntryExists(name)) spark.table(name)
-    else spark.read.parquet(path(layer, table))
+    else {
+      val p = path(layer, table)
+      footerSchema(new Path(p)) match {
+        case Some(s) => spark.read.schema(s).parquet(p)
+        // no data file or no Spark schema in its footer: infer, which
+        // also gives the usual error for a table without data files
+        case None => spark.read.parquet(p)
+      }
+    }
+  }
+
+  /** The schema Spark wrote into the footer of the table's first data
+    * file, read on the driver. Partition columns are not in it; the
+    * reader still discovers them from the directory names.
+    */
+  private def footerSchema(target: Path): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val conf = spark.sparkContext.hadoopConfiguration
+    firstDataFile(target).flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val json =
+        try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally reader.close()
+      Option(json).flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption).collect {
+        case s: StructType => s
+      }
+    }
+  }
+
+  /** First file in sorted path order that a parquet read would scan:
+    * names starting with `_` or `.` are skipped as Spark's listing skips
+    * them (`_SUCCESS`, `_temporary/`, checksums), except `_`-prefixed
+    * `k=v` partition directories.
+    */
+  private def firstDataFile(target: Path): Option[Path] = {
+    val filesystem = fs(target)
+    def visible(n: String) = !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".")
+    def first(dir: Path): Option[Path] =
+      filesystem.listStatus(dir).filter(st => visible(st.getPath.getName))
+        .sortBy(_.getPath.getName).iterator
+        .flatMap(st => if (st.isDirectory) first(st.getPath) else Some(st.getPath))
+        .nextOption()
+    if (filesystem.exists(target)) first(target) else None
   }
 
   /** Session catalog database backing this warehouse's BUCKETED tables
@@ -181,16 +238,27 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     df.write.mode("overwrite").parquet(target.toString)
   }
 
-  /** Append, date-partitioned when the schema carries `date`. */
+  /** A frame carrying `date`, clustered by it (the class's write
+    * distribution). `rebalance`, not `repartition`: AQE may still split
+    * a date above the advisory size, so one task never holds a whole
+    * oversized day.
+    */
+  private def byDate(df: DataFrame): DataFrame =
+    if (df.columns.contains("date")) df.hint("rebalance", col("date")) else df
+
+  /** Append, date-partitioned and clustered by [[byDate]] when the
+    * schema carries `date`.
+    */
   def append(df: DataFrame, layer: String, table: String): Unit = {
     dropCatalogEntry(layer, table)
-    val w = df.write.mode("append")
+    val w = byDate(df).write.mode("append")
     (if (df.columns.contains("date")) w.partitionBy("date") else w)
       .parquet(path(layer, table))
   }
 
   /** Full overwrite (dims) or dynamic partition overwrite (facts with a
-    * `date` column + partitionOverwriteMode=dynamic from GraftSession).
+    * `date` column + partitionOverwriteMode=dynamic from GraftSession),
+    * the latter clustered by [[byDate]].
     *
     * Non-partitioned (static) overwrite deletes the target directory
     * BEFORE the write job runs, so a df derived from the target itself —
@@ -202,9 +270,11 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * stages files and only swaps partition contents at job commit.
     */
   def overwrite(df: DataFrame, layer: String, table: String): Unit =
-    overwrite(df, layer, table, Map.empty)
+    overwrite(byDate(df), layer, table, Map.empty)
 
-  /** [[overwrite]] with per-write writer options. */
+  /** [[overwrite]] with per-write writer options and the caller's own
+    * distribution (no [[byDate]] clustering).
+    */
   private def overwrite(
       df: DataFrame, layer: String, table: String, options: Map[String, String]): Unit = {
     dropCatalogEntry(layer, table)

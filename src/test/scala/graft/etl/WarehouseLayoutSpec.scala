@@ -1,0 +1,78 @@
+package graft.etl
+
+import graft.TestSpark
+import org.apache.spark.graft.JobMeter
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Warehouse storage layout: a date-partitioned write leaves one file
+  * per date, a table opens without a schema job, and the count report
+  * is one scan of every table.
+  */
+class WarehouseLayoutSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  private def freshRoot(): String =
+    java.nio.file.Files.createTempDirectory("graft_layout_").toString
+
+  private lazy val wh: Warehouse = new Warehouse(spark, freshRoot())
+  private lazy val pipeline = new Pipeline(wh)
+
+  /** (layer, table) of every table directory under the warehouse root. */
+  private def tables(w: Warehouse): Seq[(String, String)] =
+    for {
+      layer <- Seq("bronze", "silver", "gold")
+      dir   <- Option(new java.io.File(w.root, layer).listFiles()).toSeq.flatten.sortBy(_.getName)
+      if dir.isDirectory
+    } yield (layer, dir.getName)
+
+  test("one overwrite of a 4-partition frame over 5 dates leaves one file per date") {
+    import spark.implicits._
+    val w = new Warehouse(spark, freshRoot())
+    val df = (0 until 200).map(i => (i, s"2024-05-0${i % 5 + 1}", i * 0.5))
+      .toDF("id", "date_s", "v")
+      .select(col("id"), col("date_s").cast("date").as("date"), col("v"))
+      .repartition(4)
+    w.overwrite(df, "bronze", "clustered")
+    val dirs = new java.io.File(w.path("bronze", "clustered")).listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("date=")).sortBy(_.getName)
+    assert(dirs.length === 5)
+    dirs.foreach { d =>
+      val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length === 1, s"${d.getName}: ${files.map(_.getName).mkString(", ")}")
+    }
+    assert(w.load("bronze", "clustered").count() === 200L)
+  }
+
+  test("after runAll every table loads with the inferred schema and no Spark job") {
+    pipeline.initBronze(nSales = 1000, nInventory = 250, nEquipment = 500, nFeedback = 100)
+    pipeline.runAll(java.sql.Date.valueOf("2025-06-20"))
+    val ts = tables(wh)
+    assert(ts.size > 20, ts)
+    val inferred = ts.map { case (l, t) => spark.read.parquet(wh.path(l, t)).schema }
+    val meter = JobMeter(spark.sparkContext)
+    meter.reset()
+    val loaded = ts.map { case (l, t) => wh.load(l, t).schema }
+    val jobs = meter.read().jobs
+    assert(jobs.isEmpty, s"${jobs.size} jobs at ${jobs.map(_.site).distinct.mkString(", ")}")
+    ts.zip(loaded.zip(inferred)).foreach { case (lt, (got, want)) =>
+      assert(got === want, s"$lt")
+    }
+  }
+
+  test("report counts every table in one scan, with a 0 row for an empty table") {
+    // an existing but empty table: a non-partitioned write of no rows
+    // still leaves one data file carrying the schema
+    wh.overwrite(wh.load("gold", "dim_marketing_events").limit(0), "gold", "dim_marketing_events")
+    val meter = JobMeter(spark.sparkContext)
+    meter.reset()
+    val got = pipeline.report().collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toSeq
+    assert(meter.read().jobs.size <= 2)
+    val want = got.map { case (lt @ (l, t), _) => lt -> wh.load(l, t).count() }
+    assert(got === want)
+    assert(got.map(_._1) === got.map(_._1).sorted)
+    assert(got.toMap.get(("gold", "dim_marketing_events")).contains(0L))
+    assert(got.toMap.get(("gold", "fact_sales")).exists(_ > 0L))
+  }
+}
