@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * shipped defects resolved: statuses case-normalized at ingest
   * (SURVEY.md §2.14-2), the corrupted-indentation sales path rebuilt to
   * its evident intent (§2.14-1), and the in-place status UPDATE replaced
-  * by [[StatusLedger]]).
+  * by silver itself: a bronze row is processed once its key is in
+  * silver).
   */
 object BronzeToSilver {
 

@@ -50,7 +50,9 @@ object Generators {
           make_dt_interval(col("day_off"), col("hour"), col("minute"), lit(0))
       )
       .withColumn("ingestion_time", col("event_time") + expr("INTERVAL 5 MINUTES"))
-      .withColumn("event_id", concat(lit("EVT_"), lpad(col("id").cast("string"), 10, "0")))
+      // zero-padded to at least 10 digits: `lpad` would cut an id past 10
+      // digits (an `idOffset` of 1e10 or more) and give distinct rows one key
+      .withColumn("event_id", format_string("EVT_%010d", col("id")))
       .withColumn(
         "quantity",
         when(col("product_id") <= 5, (draw(col("id"), 6, 3) + 1))

@@ -5,41 +5,45 @@ import org.apache.spark.sql.functions._
 
 /** In-process pipeline runner replacing the reference's Airflow DAGs
   * (SURVEY.md §2.11 G1-G5): ordered stages, a quality gate between
-  * layers, processed-key ledgers, and a per-table count report.
+  * layers, and a per-table count report.
   *
-  * The run is incremental-by-construction END TO END: each cycle
-  * processes only bronze rows absent from the ledger, merges them into
-  * the silver date partitions the batch touches, records those dates in
-  * a pending-dates table, and the gold stage recomputes ONLY those fact
-  * and daily-aggregate partitions (dynamic partition overwrite) — so a
-  * cycle's cost tracks the batch, not history, and re-running a cycle
+  * The run is incremental-by-construction END TO END. Silver is the
+  * processed set: a bronze row is pending until its key is in silver,
+  * so each cycle transforms only bronze rows whose key silver lacks,
+  * records the dates they touch in a pending-dates table, and commits
+  * them with one append to silver — new files only, no silver partition
+  * is rewritten. The gold stage then recomputes ONLY those fact and
+  * daily-aggregate partitions (dynamic partition overwrite) — so a
+  * cycle's writes track the batch, not history, and re-running a cycle
   * adds zero rows. Dim, promo-grain, and feature tables rebuild each
   * cycle but read only seed catalogs or the maintained daily-grain
   * aggregates, never event-grain history.
   *
   * Stages run in order (bronze→silver, gate, gold, maintain, report):
   * each reads what the one before wrote, and compaction rewrites the
-  * bronze partitions the report scans. Inside a stage the independent
-  * table builds overlap — the four silver domains, the gold phases'
-  * builds, the four compactions — each on its own thread, so one table's
-  * driver-side analysis, planning and codegen runs while another's tasks
-  * hold the cores. No two of them write the same table root.
+  * bronze and silver partitions the report scans. Inside a stage the
+  * independent table builds overlap — the four silver domains, the gold
+  * phases' builds, the compactions — each on its own thread, so one
+  * table's driver-side analysis, planning and codegen runs while
+  * another's tasks hold the cores. No two of them write the same table
+  * root.
   */
 final class Pipeline(wh: Warehouse) {
   import Pipeline.concurrently
 
   private def spark: SparkSession = wh.spark
 
-  /** G5 — seed bronze from the deterministic generators. */
+  /** G5 — seed bronze from the deterministic generators, the six tables
+    * at once.
+    */
   def initBronze(nSales: Long, nInventory: Long, nEquipment: Long, nFeedback: Long,
-      nPromotions: Long = 40): Unit = {
-    wh.overwrite(Generators.salesEvents(spark, nSales), "bronze", "sales_events")
-    wh.overwrite(Generators.inventoryUpdates(spark, nInventory), "bronze", "inventory_updates")
-    wh.overwrite(Generators.equipmentMetrics(spark, nEquipment), "bronze", "equipment_metrics")
-    wh.overwrite(Generators.customerFeedback(spark, nFeedback), "bronze", "customer_feedback")
-    wh.overwrite(Generators.promotions(spark, nPromotions), "bronze", "promotions")
-    wh.overwrite(Generators.weatherData(spark), "bronze", "weather_data")
-  }
+      nPromotions: Long = 40): Unit = concurrently(
+    () => wh.overwrite(Generators.salesEvents(spark, nSales), "bronze", "sales_events"),
+    () => wh.overwrite(Generators.inventoryUpdates(spark, nInventory), "bronze", "inventory_updates"),
+    () => wh.overwrite(Generators.equipmentMetrics(spark, nEquipment), "bronze", "equipment_metrics"),
+    () => wh.overwrite(Generators.customerFeedback(spark, nFeedback), "bronze", "customer_feedback"),
+    () => wh.overwrite(Generators.promotions(spark, nPromotions), "bronze", "promotions"),
+    () => wh.overwrite(Generators.weatherData(spark), "bronze", "weather_data"))
 
   /** Bronze tables the pipeline manages, in load order. */
   private val bronzeTables = Seq(
@@ -89,7 +93,7 @@ final class Pipeline(wh: Warehouse) {
   }
 
   /** Small state table recording which date partitions each cycle's
-    * ledger delta touched, per silver domain — the contract between the
+    * silver batch touched, per silver domain — the contract between the
     * incremental bronze→silver stage and the partition-scoped gold build.
     * Bounded by the calendar (a date appears at most once per domain per
     * unconsumed cycle), so collecting it to the driver is a scalar gate
@@ -127,8 +131,8 @@ final class Pipeline(wh: Warehouse) {
         .groupBy(_._1)
         .map { case (d, rows) => d -> rows.map(_._2).toSeq.sortBy(_.getTime) }
 
-  /** G1 stage 2 — Bronze→Silver with ledger-based incrementality and
-    * late-data reconciliation. Every touched date partition is recorded
+  /** G1 stage 2 — Bronze→Silver, incremental against silver's own keys,
+    * with late-data reconciliation. Every touched date partition is recorded
     * in the pending-dates table for the partition-scoped gold build. The
     * four domains run concurrently; the late-inventory reconcile follows
     * the inventory domain on its thread.
@@ -164,63 +168,63 @@ final class Pipeline(wh: Warehouse) {
     val lateDates = newer.select(col("date")).distinct()
       .collect().map(_.getDate(0)).toSeq
     if (lateDates.nonEmpty) {
+      // dates recorded BEFORE the overwrite: once silver holds the newer
+      // rows a re-run finds nothing newer, so a date recorded after it
+      // could be lost with the crash
+      recordPendingDates("inventory_updates", lateDates)
       val affected = silverInv
         .where(col("date").isin(lateDates: _*))
       wh.overwrite(
         BronzeToSilver.reconcileLate(affected, newer, "update_id"),
         "silver", "inventory_updates")
-      recordPendingDates("inventory_updates", lateDates)
     }
   }
 
+  /** One silver domain's cycle. Silver is the processed set: the batch
+    * is every bronze row whose key silver lacks (all of bronze before
+    * the first commit), one row per key. Writes go in this order:
+    *  1. the batch's dates into the pending-dates table;
+    *  2. for sales, the batch dates' quality aggregate, computed from
+    *     their silver rows plus the batch — the batch's keys are new
+    *     table-wide, so this is those partitions' content after step 3;
+    *  3. the append of the batch to silver: the commit.
+    * A crash before the commit leaves the batch pending, and the re-run
+    * rewrites steps 1-2 identically. Keys a partly committed append
+    * missed stay pending too, so the next run adds exactly those rows.
+    */
   private def runDomain(
       name: String,
       keyCol: String,
       transform: DataFrame => DataFrame,
       bronzeTable: String = ""
   ): Unit = {
-    val src    = if (bronzeTable.nonEmpty) bronzeTable else name
-    val bronze = wh.load("bronze", src)
-    val ledgerPath = s"ledger_$name"
-    val ledger = wh.loadOr("silver", ledgerPath,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(keyCol, org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("processed_at", org.apache.spark.sql.types.TimestampType))))
-    // persisted: the batch feeds four jobs (date collect, merge write,
-    // ledger append) — without the persist each re-runs the bronze
-    // anti-join
-    val batch = transform(StatusLedger.pending(bronze, ledger, keyCol)).persist()
+    val bronze = wh.load("bronze", if (bronzeTable.nonEmpty) bronzeTable else name)
+    val silver = if (wh.exists("silver", name)) Some(wh.load("silver", name)) else None
+    val pending = silver.fold(bronze)(s =>
+      bronze.join(s.select(col(keyCol)), Seq(keyCol), "left_anti"))
+    // persisted: the batch feeds the date collect, the sales quality
+    // aggregate and the commit — without the persist each re-runs the
+    // bronze anti-join
+    val batch = transform(pending).dropDuplicates(keyCol).persist()
     try {
       val batchDates = batch.select(col("date")).distinct()
         .collect().map(_.getDate(0)).toSeq
       if (batchDates.nonEmpty) {
-        if (wh.exists("silver", name)) {
-          val silver = wh.load("silver", name)
-          // partition-scoped merge: only the batch's date partitions are
-          // read (partition-pruned literal filter) and dynamically
-          // overwritten. Scoping the anti-join target to those partitions
-          // is exact because the ledger already guarantees batch keys are
-          // new TABLE-wide — so a key can't hide in an unread partition.
-          val scoped = silver.where(col("date").isin(batchDates: _*))
-          val merged = graft.operators.MergeInto.insertOnly(
-            scoped, batch.select(silver.columns.map(col).toSeq: _*), Seq(keyCol))
-          wh.overwrite(merged, "silver", name)
-        } else wh.overwrite(batch, "silver", name)
         recordPendingDates(name, batchDates)
-        // maintained quality state: per-date (decimal score sum, count)
-        // from the just-rewritten sales partitions, so the quality gate
-        // reads O(days) aggregate rows instead of full-scanning silver
-        // every cycle. Per-date exact (recomputed from the whole
-        // partition), deterministic (decimal accumulation). First cycle
-        // on a warehouse PREDATING the aggregate backfills from ALL
-        // silver dates (one full scan) — seeding from the batch alone
-        // would permanently exclude historical dates from the gate's
-        // average once the table exists.
+        // maintained quality state: per-date (decimal score sum, count),
+        // so the quality gate reads O(days) aggregate rows instead of
+        // full-scanning silver every cycle. Per-date exact (recomputed
+        // from the partition's silver rows plus the batch), deterministic
+        // (decimal accumulation). A warehouse PREDATING the aggregate
+        // backfills from ALL silver dates (one full scan) — seeding from
+        // the batch alone would permanently exclude historical dates
+        // from the gate's average once the table exists.
         if (name == "sales_events") {
-          val silverAll = wh.load("silver", name)
-          val scope =
-            if (!wh.exists("silver", "agg_quality_daily")) silverAll
-            else silverAll.where(col("date").isin(batchDates: _*))
+          val scores = Seq(col("date"), col("data_quality_score"))
+          val history = silver.map(s =>
+            if (!wh.exists("silver", "agg_quality_daily")) s
+            else s.where(col("date").isin(batchDates: _*)))
+          val scope = (history.toSeq :+ batch).map(_.select(scores: _*)).reduce(_ unionByName _)
           wh.overwrite(
             scope.groupBy(col("date")).agg(
               sum(col("data_quality_score")
@@ -228,9 +232,7 @@ final class Pipeline(wh: Warehouse) {
               count(lit(1)).as("n")),
             "silver", "agg_quality_daily")
         }
-        // last write: until the ledger records the batch, a crash leaves
-        // it pending, and the re-run's merge is insert-only on the key
-        wh.append(StatusLedger.markProcessed(batch, keyCol), "silver", ledgerPath)
+        wh.append(batch, "silver", name)
       }
     } finally batch.unpersist(false)
   }
@@ -476,18 +478,21 @@ final class Pipeline(wh: Warehouse) {
       StructField("row_count", LongType, nullable = false))))
   }
 
-  /** Maintenance stage: compact the append-heavy bronze facts. A batch
-    * write leaves one file per date (the warehouse clusters date-
-    * partitioned writes), so batch overwrites no longer fragment; what
-    * still leaves dust is streaming micro-batches and separate appends
-    * to the same date, one file each. Dims and gold snapshots rewrite
-    * whole on every cycle. Returns (table → (filesBefore, filesAfter))
-    * for the run log.
+  /** Maintenance stage: compact the append-heavy bronze and silver
+    * facts. A batch write leaves one file per date (the warehouse
+    * clusters date-partitioned writes), so batch overwrites no longer
+    * fragment; what still leaves dust is streaming micro-batches and
+    * separate appends to the same date, one file each — a late silver
+    * batch adds a file to its old dates instead of rewriting them. Dims
+    * and gold snapshots rewrite whole on every cycle. Returns (table →
+    * (filesBefore, filesAfter)) for the run log.
     */
   def maintain(targetBytes: Long = 128L << 20): Map[String, (Long, Long)] = {
     val appendTables = Seq(
       "bronze" -> "sales_events", "bronze" -> "inventory_updates",
-      "bronze" -> "equipment_metrics", "bronze" -> "customer_feedback")
+      "bronze" -> "equipment_metrics", "bronze" -> "customer_feedback",
+      "silver" -> "sales_events", "silver" -> "inventory_updates",
+      "silver" -> "equipment_metrics", "silver" -> "feedback")
     val files = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
     concurrently(appendTables
       .filter { case (l, t) => wh.exists(l, t) }

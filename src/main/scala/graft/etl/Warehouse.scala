@@ -392,22 +392,3 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     (before.size.toLong, parquetFiles(target).size.toLong)
   }
 }
-
-/** Processed-row ledger replacing in-place `UPDATE ... SET
-  * processing_status='processed'` (bronze_to_silver.py:85-90 — SURVEY.md
-  * §2.9 M4, §7 hard part (f)). In-place status flips force a rewrite of
-  * every touched partition per ETL cycle; a ledger of processed business
-  * keys makes "pending" an anti-join instead — O(batch) appended state,
-  * zero rewrite of the bronze data.
-  */
-object StatusLedger {
-
-  /** Rows of `bronze` not yet recorded in the ledger for `domain`. */
-  def pending(bronze: DataFrame, ledger: DataFrame, keyCol: String): DataFrame =
-    bronze.join(ledger.select(col(keyCol)), Seq(keyCol), "left_anti")
-
-  /** Ledger delta for a batch just processed. */
-  def markProcessed(batch: DataFrame, keyCol: String): DataFrame =
-    batch.select(col(keyCol)).distinct()
-      .withColumn("processed_at", current_timestamp())
-}

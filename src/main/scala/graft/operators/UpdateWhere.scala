@@ -12,9 +12,8 @@ import org.apache.spark.sql.functions._
   * The caller overwrites only the affected partitions (dynamic partition
   * overwrite) — at 100 TB the predicate should include the partition
   * column so the rewrite is partition-pruned, not a full-table rewrite.
-  * For the high-churn `processing_status` flag specifically, see
-  * [[graft.etl.StatusLedger]]: a separate ledger table avoids rewrite
-  * amplification entirely.
+  * The medallion pipeline never flips `processing_status` this way: a
+  * bronze row counts as processed once its key is in silver.
   */
 object UpdateWhere {
 

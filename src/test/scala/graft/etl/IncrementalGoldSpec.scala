@@ -253,7 +253,7 @@ class IncrementalGoldSpec extends AnyFunSuite {
     assert(listing(wh, "gold", "fact_sales") === factBefore)
   }
 
-  test("a failed ledger append leaves the batch pending, and its re-run adds no duplicates") {
+  test("a failed silver commit leaves the batch pending, and its re-run adds no duplicates") {
     val wh = freshWarehouse()
     val p  = new Pipeline(wh)
     p.initBronze(nSales = 500, nInventory = 100, nEquipment = 100, nFeedback = 50)
@@ -262,9 +262,9 @@ class IncrementalGoldSpec extends AnyFunSuite {
     val silverBefore = wh.load("silver", "sales_events").count()
     p.appendBronzeSales(Generators.salesEvents(spark, 100, days = 1,
       baseTs = "2025-07-10 00:00:00", idOffset = 7300000L))
-    // a plain file where the ledger append stages its output: that write
+    // a plain file where the silver append stages its output: the commit
     // fails, every earlier write of the sales domain succeeds
-    val squat = new java.io.File(wh.path("silver", "ledger_sales_events"), "_temporary")
+    val squat = new java.io.File(wh.path("silver", "sales_events"), "_temporary")
     assert(squat.createNewFile())
     intercept[Exception](p.bronzeToSilver())
     val pending =
@@ -272,12 +272,16 @@ class IncrementalGoldSpec extends AnyFunSuite {
       else wh.load("silver", "gold_pending_dates")
         .where(col("domain") === "sales_events")
         .collect().map(_.getAs[java.sql.Date]("date").toString).toSet
-    assert(pending === Set("2025-07-10"), "the unledgered batch's date must stay pending")
+    assert(pending === Set("2025-07-10"), "the uncommitted batch's date must stay pending")
 
     assert(squat.delete())
     p.bronzeToSilver()
     assert(wh.load("silver", "sales_events").count() === silverBefore + 100,
-      "re-running the unledgered batch duplicated silver rows")
+      "re-running the uncommitted batch duplicated silver rows")
+    val fullScan = wh.load("silver", "sales_events")
+      .agg(avg(col("data_quality_score"))).first().getDouble(0)
+    assert(math.abs(p.qualityGate() - fullScan) < 1e-9,
+      "the quality aggregate written before the failed commit was not rewritten exactly")
     p.silverToGoldIncremental(java.sql.Date.valueOf("2025-07-11"))
     assert(wh.load("gold", "fact_sales").count() === silverBefore + 100)
   }
