@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.operators.{MergeInto, QualityScore}
+import graft.operators.QualityScore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,17 +95,6 @@ object BronzeToSilver {
       inventoryChecks
     ).withColumn("etl_timestamp", current_timestamp())
   }
-
-  /** Late-data reconcile (T5, bronze_to_silver.py:101-111 + 151-157):
-    * newer-wins merge of late-arriving rows into already-processed
-    * silver, keyed by business key with ingestion_time as the version.
-    */
-  def reconcileLate(
-      silver: DataFrame,
-      lateBatch: DataFrame,
-      key: String
-  ): DataFrame =
-    MergeInto.upsert(silver, lateBatch, Seq(key), "ingestion_time")
 
   /** Equipment: W2 sessionization — operational hours from consecutive
     * sensor events per equipment per day (bronze_to_silver.py:193-201).

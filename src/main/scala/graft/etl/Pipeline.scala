@@ -8,16 +8,16 @@ import org.apache.spark.sql.functions._
   * layers, and a per-table count report.
   *
   * The run is incremental-by-construction END TO END. Silver is the
-  * processed set: a bronze row is pending until its key is in silver,
-  * so each cycle transforms only bronze rows whose key silver lacks,
-  * records the dates they touch in a pending-dates table, and commits
-  * them with one append to silver — new files only, no silver partition
-  * is rewritten. The gold stage then recomputes ONLY those fact and
-  * daily-aggregate partitions (dynamic partition overwrite) — so a
-  * cycle's writes track the batch, not history, and re-running a cycle
-  * adds zero rows. Dim, promo-grain, and feature tables rebuild each
-  * cycle but read only seed catalogs or the maintained daily-grain
-  * aggregates, never event-grain history.
+  * processed set: a bronze row is pending until silver holds its key
+  * (inventory: at an equal or newer version), so each cycle transforms
+  * only pending rows, records the dates the commit touches in a
+  * pending-dates table, and merges them into silver (`Warehouse.merge`).
+  * The gold stage then recomputes ONLY those fact and daily-aggregate
+  * partitions (dynamic partition overwrite) — so a cycle's writes track
+  * the batch, not history, and re-running a cycle adds zero rows. Dim,
+  * promo-grain, and feature tables rebuild each cycle but read only seed
+  * catalogs or the maintained daily-grain aggregates, never event-grain
+  * history.
   *
   * Stages run in order (bronze→silver, gate, gold, maintain, report):
   * each reads what the one before wrote, and compaction rewrites the
@@ -131,63 +131,26 @@ final class Pipeline(wh: Warehouse) {
         .groupBy(_._1)
         .map { case (d, rows) => d -> rows.map(_._2).toSeq.sortBy(_.getTime) }
 
-  /** G1 stage 2 — Bronze→Silver, incremental against silver's own keys,
-    * with late-data reconciliation. Every touched date partition is recorded
-    * in the pending-dates table for the partition-scoped gold build. The
-    * four domains run concurrently; the late-inventory reconcile follows
-    * the inventory domain on its thread.
+  /** G1 stage 2 — Bronze→Silver: each domain's bronze merged into silver
+    * on its key ([[Warehouse.merge]]), insert-only except inventory, where
+    * a newer `ingestion_time` replaces the silver row (T5, late data).
+    * Every date a commit touches, a replaced version's date included, is
+    * recorded for the gold build. The four domains run concurrently.
     */
   def bronzeToSilver(): Unit = concurrently(
     () => runDomain("sales_events", "event_id", BronzeToSilver.sales),
-    () => {
-      runDomain("inventory_updates", "update_id", BronzeToSilver.inventory)
-      reconcileLateInventory()
-    },
+    () => runDomain("inventory_updates", "update_id", BronzeToSilver.inventory,
+      version = Some("ingestion_time")),
     () => runDomain("equipment_metrics", "metric_id", BronzeToSilver.equipment),
     () => runDomain("feedback", "feedback_id", BronzeToSilver.feedback,
       bronzeTable = "customer_feedback"))
 
-  /** T5: reconcile late-arriving inventory into silver, newest wins.
-    * Bounded: only candidates STRICTLY NEWER than their silver version
-    * survive (version probe against silver's key projection), and only
-    * the date partitions those rows touch are merged and dynamically
-    * overwritten — O(late batch) work per cycle, not O(full history).
-    */
-  private def reconcileLateInventory(): Unit = {
-    val silverInv = wh.load("silver", "inventory_updates")
-    val newer = BronzeToSilver
-      .inventory(wh.load("bronze", "inventory_updates"))
-      .where(col("late_arrival_hours") > 0)
-      .join(
-        silverInv.select(col("update_id"), col("ingestion_time").as("__cur_ingest")),
-        Seq("update_id"), "left")
-      .where(col("__cur_ingest").isNull || col("ingestion_time") > col("__cur_ingest"))
-      .drop("__cur_ingest")
-    // dates collected BEFORE the overwrite: the `newer` plan pins the
-    // pre-reconcile silver file listing, which the overwrite deletes
-    val lateDates = newer.select(col("date")).distinct()
-      .collect().map(_.getDate(0)).toSeq
-    if (lateDates.nonEmpty) {
-      // dates recorded BEFORE the overwrite: once silver holds the newer
-      // rows a re-run finds nothing newer, so a date recorded after it
-      // could be lost with the crash
-      recordPendingDates("inventory_updates", lateDates)
-      val affected = silverInv
-        .where(col("date").isin(lateDates: _*))
-      wh.overwrite(
-        BronzeToSilver.reconcileLate(affected, newer, "update_id"),
-        "silver", "inventory_updates")
-    }
-  }
-
-  /** One silver domain's cycle. Silver is the processed set: the batch
-    * is every bronze row whose key silver lacks (all of bronze before
-    * the first commit), one row per key. Writes go in this order:
-    *  1. the batch's dates into the pending-dates table;
+  /** One silver domain's cycle: bronze merged into silver on `keyCol`,
+    * `transform` applied to the pending rows only. Before the commit:
+    *  1. the batch's dates go into the pending-dates table;
     *  2. for sales, the batch dates' quality aggregate, computed from
-    *     their silver rows plus the batch — the batch's keys are new
-    *     table-wide, so this is those partitions' content after step 3;
-    *  3. the append of the batch to silver: the commit.
+    *     their silver rows plus the batch — sales is insert-only, so
+    *     this is those partitions' content after the commit.
     * A crash before the commit leaves the batch pending, and the re-run
     * rewrites steps 1-2 identically. Keys a partly committed append
     * missed stay pending too, so the next run adds exactly those rows.
@@ -196,32 +159,20 @@ final class Pipeline(wh: Warehouse) {
       name: String,
       keyCol: String,
       transform: DataFrame => DataFrame,
-      bronzeTable: String = ""
-  ): Unit = {
-    val bronze = wh.load("bronze", if (bronzeTable.nonEmpty) bronzeTable else name)
-    val silver = if (wh.exists("silver", name)) Some(wh.load("silver", name)) else None
-    val pending = silver.fold(bronze)(s =>
-      bronze.join(s.select(col(keyCol)), Seq(keyCol), "left_anti"))
-    // persisted: the batch feeds the date collect, the sales quality
-    // aggregate and the commit — without the persist each re-runs the
-    // bronze anti-join
-    val batch = transform(pending).dropDuplicates(keyCol).persist()
-    try {
-      val batchDates = batch.select(col("date")).distinct()
-        .collect().map(_.getDate(0)).toSeq
-      if (batchDates.nonEmpty) {
+      bronzeTable: String = "",
+      version: Option[String] = None
+  ): Unit =
+    wh.merge(wh.load("bronze", if (bronzeTable.nonEmpty) bronzeTable else name), "silver", name,
+      Seq(keyCol), version, transform, (batch, batchDates) => {
         recordPendingDates(name, batchDates)
-        // maintained quality state: per-date (decimal score sum, count),
-        // so the quality gate reads O(days) aggregate rows instead of
-        // full-scanning silver every cycle. Per-date exact (recomputed
-        // from the partition's silver rows plus the batch), deterministic
-        // (decimal accumulation). A warehouse PREDATING the aggregate
-        // backfills from ALL silver dates (one full scan) — seeding from
-        // the batch alone would permanently exclude historical dates
-        // from the gate's average once the table exists.
+        // maintained quality state: per-date exact (score sum, count) in
+        // decimal, so the gate reads O(days) rows, not all of silver. A
+        // warehouse PREDATING the aggregate backfills from ALL silver
+        // dates once: seeded from the batch alone, the gate's average
+        // would leave history out for good.
         if (name == "sales_events") {
           val scores = Seq(col("date"), col("data_quality_score"))
-          val history = silver.map(s =>
+          val history = Option.when(wh.exists("silver", name))(wh.load("silver", name)).map(s =>
             if (!wh.exists("silver", "agg_quality_daily")) s
             else s.where(col("date").isin(batchDates: _*)))
           val scope = (history.toSeq :+ batch).map(_.select(scores: _*)).reduce(_ unionByName _)
@@ -232,10 +183,7 @@ final class Pipeline(wh: Warehouse) {
               count(lit(1)).as("n")),
             "silver", "agg_quality_daily")
         }
-        wh.append(batch, "silver", name)
-      }
-    } finally batch.unpersist(false)
-  }
+      })
 
   /** G3 — quality gate: average silver quality score must clear the
     * threshold before gold builds (bakery_batch_etl.py:54-62; threshold

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 /** Parquet-backed warehouse replacing the reference's Iceberg catalog
   * (`local.bronze/silver/gold.*` — spark-defaults.conf:1-5). Tables are
   * date-partitioned directories; overwrites are partition-scoped via
-  * dynamic partition overwrite, so a MERGE rewrite touches only the
-  * partitions the source batch spans — the property that keeps rewrite
-  * amplification bounded at 100 TB.
+  * dynamic partition overwrite. Keyed writes go through [[merge]], the
+  * one `MERGE INTO`: new keys land as an append, and replaced versions
+  * rewrite only the dates of the new and the replaced rows — the
+  * property that keeps rewrite amplification bounded at 100 TB.
   *
   * Write distribution: like an Iceberg table `PARTITIONED BY (date)`
   * with hash distribution, [[overwrite]] and [[append]] cluster a frame
@@ -31,13 +32,12 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   private def fs(p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Hadoop FileSystem check so the warehouse root can be local, hdfs://
-    * or s3a:// alike (a `java.io.File` probe breaks on object storage).
+  /** True when the table holds a data file, so a directory a failed
+    * first commit left empty reads as absent. A Hadoop FileSystem listing:
+    * the root can be local, hdfs:// or s3a:// alike.
     */
-  def exists(layer: String, table: String): Boolean = {
-    val p = new Path(path(layer, table))
-    fs(p).exists(p)
-  }
+  def exists(layer: String, table: String): Boolean =
+    firstDataFile(new Path(path(layer, table))).isDefined
 
   def load(layer: String, table: String): DataFrame = {
     val name = catalogName(layer, table)
@@ -297,6 +297,74 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         filesystem.delete(old, true)
       }
     }
+  }
+
+  /** Keyed `MERGE INTO layer.table USING source ON keys`, insert-only or
+    * newer-wins on `version`: the only code that decides which rows of a
+    * keyed batch land and what that rewrites.
+    *  1. A `source` row is pending when the table lacks its key or, with
+    *     `version`, holds it only at a strictly older version (ties keep
+    *     the table's row, so a replayed batch lands nothing).
+    *  2. `prepare` runs on the pending rows and keeps the columns it does
+    *     not derive; then one row per key, the newest version if any.
+    *  3. The rows are persisted, one collect gives the dates the commit
+    *     touches (the rows' and the replaced versions'), and
+    *     `beforeCommit(rows, dates)` runs. An empty batch stops here.
+    *  4. No version replaced: one append. Otherwise only those dates are
+    *     rewritten, `target[dates]` minus the batch's keys plus the batch
+    *     (a table without `date` whole). Returns the dates.
+    */
+  def merge(
+      source: DataFrame,
+      layer: String,
+      table: String,
+      keys: Seq[String],
+      version: Option[String] = None,
+      prepare: DataFrame => DataFrame = identity,
+      beforeCommit: (DataFrame, Seq[java.sql.Date]) => Unit = (_, _) => ()
+  ): Seq[java.sql.Date] = {
+    val target  = Option.when(exists(layer, table))(load(layer, table))
+    val keyCols = keys.map(col)
+    def dateOf(df: DataFrame) = if (df.columns.contains("date")) col("date") else lit(null).cast("date")
+    // (version, date) the table holds a key at, null for a new key; only
+    // a versioned merge into an existing table carries it
+    val held    = "__merge_held"
+    val pending = (target, version) match {
+      case (Some(t), None) => source.join(t.select(keyCols: _*), keys, "left_anti")
+      case (Some(t), Some(v)) =>
+        source.join(t.select(keyCols :+ struct(col(v).as("v"), dateOf(t).as("date")).as(held): _*),
+          keys, "left").where(col(held).isNull || col(v) > col(s"$held.v"))
+      case (None, _) => source
+    }
+    val batch = version.fold(prepare(pending).dropDuplicates(keys)) { v =>
+      val newest = org.apache.spark.sql.expressions.Window.partitionBy(keyCols: _*).orderBy(col(v).desc)
+      prepare(pending).withColumn("__merge_rn", row_number().over(newest))
+        .where(col("__merge_rn") === 1).drop("__merge_rn")
+    }.persist()
+    try {
+      // distinct (date, replaced version's date, replaces) of the batch
+      val marks = (if (!batch.columns.contains(held)) batch.select(dateOf(batch))
+        else batch.select(dateOf(batch), col(s"$held.date"), col(held).isNotNull)).distinct().collect()
+      val dates = marks.toSeq.flatMap(_.toSeq.collect { case d: java.sql.Date => d })
+        .distinct.sortBy(_.getTime)
+      val rows = batch.drop(held)
+      if (marks.nonEmpty) {
+        beforeCommit(rows, dates)
+        if (!marks.exists(_.toSeq.contains(true))) append(rows, layer, table)
+        else {
+          val scope = if (!rows.columns.contains("date")) target.get
+            else target.get.where(col("date").isin(dates: _*))
+          def files(dir: Path) =
+            if (fs(dir).exists(dir)) fs(dir).listStatus(dir).map(_.getPath.getName).toSet else Set.empty[String]
+          val before = dates.map(d => new Path(path(layer, table), s"date=$d")).map(dir => dir -> files(dir))
+          overwrite(scope.join(rows.select(keyCols: _*), keys, "left_anti").unionByName(rows), layer, table)
+          // dynamic partition overwrite leaves a date the frame has no
+          // row for as it was; a rewritten date holds only new files
+          before.foreach { case (dir, old) => if (files(dir).subsetOf(old)) fs(dir).delete(dir, true) }
+        }
+      }
+      dates
+    } finally batch.unpersist(false)
   }
 
   /** Drop a table: catalog entry (if any) and data files. Used for

@@ -1,22 +1,21 @@
 package graft.streaming
 
 import graft.etl.Warehouse
-import graft.operators.MergeInto
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming MERGE: upsert each micro-batch into a warehouse table with
   * newer-wins semantics — the standard "CDC stream into a warehouse"
   * pattern. The reference only appends raw events to bronze and
-  * deduplicates in a later batch hop; `foreachBatch` + the MERGE kernel
-  * collapses that to one exactly-once-per-batch upsert (foreachBatch
-  * re-delivery is idempotent here: a replayed batch loses every tie to
-  * the already-merged target).
+  * deduplicates in a later batch hop; `foreachBatch` + the warehouse's
+  * keyed [[Warehouse.merge]] collapses that to one exactly-once-per-batch
+  * upsert (foreachBatch re-delivery is idempotent here: a replayed batch
+  * loses every tie to the already-merged target).
   *
-  * Scale shape: each micro-batch triggers one keyed shuffle of
-  * target ∪ batch. For a date-partitioned target the Warehouse's
-  * dynamic partition overwrite keeps the rewrite bounded to the
-  * partitions the batch touches.
+  * Scale shape: each micro-batch joins with the target's keys. A batch
+  * of new keys is one append; one that replaces versions of a
+  * date-partitioned target rewrites only the partitions of the new and
+  * the replaced rows (a target without `date` is rewritten whole).
   */
 object StreamingUpsert {
 
@@ -30,11 +29,7 @@ object StreamingUpsert {
   ): StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val merged =
-          if (wh.exists(layer, table))
-            MergeInto.upsert(wh.load(layer, table), batch.toDF(), keys, versionCol)
-          else batch.toDF()
-        wh.overwrite(merged, layer, table)
+        wh.merge(batch.toDF(), layer, table, keys, Some(versionCol))
         ()
       }
       .start()
