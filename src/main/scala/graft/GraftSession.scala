@@ -34,7 +34,6 @@ object GraftSession {
       // larger in-memory hash map is safe.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
 

@@ -29,7 +29,7 @@ object MlFeatures {
     * [[SilverToGold.aggDailySales]]), not the event-grain facts: at
     * 100 TB the feature rebuild reads days×products×stores rows, never
     * the raw fact, and the aggregates themselves are kept current with
-    * per-date dynamic partition overwrite.
+    * a dated overwrite of the pending dates.
     *
     * Join shapes, in 100 TB order: the daily aggregate AND the
     * inventory aggregate are both daily-grain (product, store, date) —

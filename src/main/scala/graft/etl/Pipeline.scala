@@ -12,12 +12,12 @@ import org.apache.spark.sql.functions._
   * (inventory: at an equal or newer version), so each cycle transforms
   * only pending rows, records the dates the commit touches in a
   * pending-dates table, and merges them into silver (`Warehouse.merge`).
-  * The gold stage then recomputes ONLY those fact and daily-aggregate
-  * partitions (dynamic partition overwrite) — so a cycle's writes track
-  * the batch, not history, and re-running a cycle adds zero rows. Dim,
-  * promo-grain, and feature tables rebuild each cycle but read only seed
-  * catalogs or the maintained daily-grain aggregates, never event-grain
-  * history.
+  * The gold stage then rewrites ONLY those fact and daily-aggregate
+  * dates (a dated overwrite: a date silver lost is deleted) — so a
+  * cycle's writes track the batch, not history, and re-running a cycle
+  * adds zero rows. Dim, promo-grain, and feature tables rebuild each
+  * cycle but read only seed catalogs or the maintained daily-grain
+  * aggregates, never event-grain history.
   *
   * Stages run in order (bronze→silver, gate, gold, maintain, report):
   * each reads what the one before wrote, and compaction rewrites the
@@ -63,9 +63,7 @@ final class Pipeline(wh: Warehouse) {
       .filter(wh.exists("bronze", _))
       .map { t =>
         val snapshot = s"${t}_$stamp"
-        // full replace, NOT the dynamic partition overwrite: a same-day
-        // re-run after bronze changed must not merge the two states
-        wh.replaceSnapshot(wh.load("bronze", t), "backup", snapshot)
+        wh.overwrite(wh.load("bronze", t), "backup", snapshot)
         snapshot
       }
   }
@@ -166,33 +164,33 @@ final class Pipeline(wh: Warehouse) {
       Seq(keyCol), version, transform, (batch, batchDates) => {
         recordPendingDates(name, batchDates)
         // maintained quality state: per-date exact (score sum, count) in
-        // decimal, so the gate reads O(days) rows, not all of silver. A
-        // warehouse PREDATING the aggregate backfills from ALL silver
-        // dates once: seeded from the batch alone, the gate's average
-        // would leave history out for good.
+        // decimal over the rows that have a date, so the gate reads O(days)
+        // rows, not all of silver. A warehouse PREDATING the aggregate
+        // backfills from ALL silver dates once: seeded from the batch
+        // alone, the gate's average would leave history out for good.
         if (name == "sales_events") {
-          val scores = Seq(col("date"), col("data_quality_score"))
+          val scores   = Seq(col("date"), col("data_quality_score"))
+          val backfill = !wh.exists("silver", "agg_quality_daily")
           val history = Option.when(wh.exists("silver", name))(wh.load("silver", name)).map(s =>
-            if (!wh.exists("silver", "agg_quality_daily")) s
-            else s.where(col("date").isin(batchDates: _*)))
+            if (backfill) s else s.where(col("date").isin(batchDates: _*)))
           val scope = (history.toSeq :+ batch).map(_.select(scores: _*)).reduce(_ unionByName _)
-          wh.overwrite(
-            scope.groupBy(col("date")).agg(
-              sum(col("data_quality_score")
-                .cast(org.apache.spark.sql.types.DecimalType(28, 6))).as("score_sum"),
-              count(lit(1)).as("n")),
-            "silver", "agg_quality_daily")
+          val daily = scope.where(col("date").isNotNull).groupBy(col("date")).agg(
+            sum(col("data_quality_score")
+              .cast(org.apache.spark.sql.types.DecimalType(28, 6))).as("score_sum"),
+            count(lit(1)).as("n"))
+          if (backfill) wh.overwrite(daily, "silver", "agg_quality_daily")
+          else wh.overwrite(daily, "silver", "agg_quality_daily", batchDates)
         }
       })
 
-  /** G3 — quality gate: average silver quality score must clear the
-    * threshold before gold builds (bakery_batch_etl.py:54-62; threshold
-    * 80 in the reference, configurable here). Reads the maintained
-    * per-date (score_sum, n) aggregate — O(days) rows, exact weighted
-    * average — instead of full-scanning silver each cycle; warehouses
-    * predating the aggregate fall back to the scan once (the next
-    * bronzeToSilver cycle BACKFILLS the state from all silver dates,
-    * so the gate's average always covers full history).
+  /** G3 — quality gate: the average quality score of the silver sales
+    * rows that have a date must clear the threshold before gold builds
+    * (bakery_batch_etl.py:54-62; threshold 80 in the reference,
+    * configurable here). Reads the maintained per-date (score_sum, n)
+    * aggregate — O(days) rows, exact weighted average — instead of
+    * full-scanning silver each cycle; warehouses predating the aggregate
+    * fall back to the scan once (the next bronzeToSilver cycle BACKFILLS
+    * the state from all silver dates, so the average covers history).
     */
   def qualityGate(threshold: Double = 50.0): Double = {
     val avgScore =
@@ -202,7 +200,7 @@ final class Pipeline(wh: Warehouse) {
           .first()
           .getDouble(0)
       else
-        wh.load("silver", "sales_events")
+        wh.load("silver", "sales_events").where(col("date").isNotNull)
           .agg(avg(col("data_quality_score")))
           .first()
           .getDouble(0)
@@ -220,16 +218,16 @@ final class Pipeline(wh: Warehouse) {
 
   /** G1 stage 3, partition-scoped: consumes the pending-dates table the
     * bronze→silver stage wrote and recomputes ONLY those date partitions
-    * of the history-sized facts and maintained daily aggregates (dynamic
-    * partition overwrite). Per-date recompute is exact for every scoped
-    * table — fact_sales' transaction sequence windows by (store, date),
-    * the other facts filter/aggregate within a date, and the aggregates'
-    * grain includes the date — so the result is hash-identical to a full
-    * rebuild while each cycle costs O(touched partitions), not
-    * O(history): the property that keeps a 2-hour cadence runnable at
-    * 100 TB. Dims, promo-grain facts, and feature tables are rebuilt
-    * every cycle but read only seed catalogs or the compact daily-grain
-    * aggregates — never event-grain history.
+    * of the history-sized facts and maintained daily aggregates (a dated
+    * overwrite: a date left without rows is deleted). Per-date recompute
+    * is exact for every scoped table — fact_sales' transaction sequence
+    * windows by (store, date), the other facts filter/aggregate within a
+    * date, and the aggregates' grain includes the date — so the result is
+    * hash-identical to a full rebuild while each cycle costs O(touched
+    * partitions), not O(history): the property that keeps a 2-hour
+    * cadence runnable at 100 TB. Dims, promo-grain facts, and feature
+    * tables are rebuilt every cycle but read only seed catalogs or the
+    * compact daily-grain aggregates — never event-grain history.
     */
   def silverToGoldIncremental(asOf: java.sql.Date): Unit = {
     buildGold(asOf, Some(loadPendingDates()))
@@ -249,6 +247,11 @@ final class Pipeline(wh: Warehouse) {
       case Some(p) =>
         val dates = p.getOrElse(domain, Nil)
         if (dates.isEmpty) None else Some(df.where(col("date").isin(dates: _*)))
+    }
+    // gold write of a scoped frame: its pending dates, or the whole table
+    def overwriteScoped(df: DataFrame, table: String, domain: String): Unit = pending match {
+      case None    => wh.overwrite(df, "gold", table)
+      case Some(p) => wh.overwrite(df, "gold", table, p.getOrElse(domain, Nil))
     }
 
     // three phases; inside each the builds read only tables an earlier
@@ -282,29 +285,29 @@ final class Pipeline(wh: Warehouse) {
           // reload after the swap: dimProduct's plan pinned the
           // PRE-overwrite file listing of gold/dim_product, which no
           // longer exists
-          wh.overwrite(SilverToGold.factSales(s, wh.load("gold", "dim_product")),
-            "gold", "fact_sales")
-          wh.overwrite(
+          overwriteScoped(SilverToGold.factSales(s, wh.load("gold", "dim_product")),
+            "fact_sales", "sales_events")
+          overwriteScoped(
             SilverToGold.aggDailySales(scoped(wh.load("gold", "fact_sales"), "sales_events").get),
-            "gold", "agg_daily_sales")
-          wh.overwrite(SilverToGold.aggCustomerDaily(s), "gold", "agg_customer_daily")
+            "agg_daily_sales", "sales_events")
+          overwriteScoped(SilverToGold.aggCustomerDaily(s), "agg_customer_daily", "sales_events")
         }
         if (wh.exists("gold", "agg_customer_daily"))
           wh.overwrite(SilverToGold.dimCustomer(wh.load("gold", "agg_customer_daily")),
             "gold", "dim_customer")
       },
       () => scoped(wh.load("silver", "inventory_updates"), "inventory_updates").foreach { s =>
-        wh.overwrite(SilverToGold.factInventory(s), "gold", "fact_inventory")
-        wh.overwrite(
+        overwriteScoped(SilverToGold.factInventory(s), "fact_inventory", "inventory_updates")
+        overwriteScoped(
           SilverToGold.aggInventoryDaily(
             scoped(wh.load("gold", "fact_inventory"), "inventory_updates").get),
-          "gold", "agg_inventory_daily")
+          "agg_inventory_daily", "inventory_updates")
       },
       () => scoped(wh.load("silver", "equipment_metrics"), "equipment_metrics").foreach { s =>
-        wh.overwrite(SilverToGold.factEquipment(s), "gold", "fact_equipment_performance")
+        overwriteScoped(SilverToGold.factEquipment(s), "fact_equipment_performance", "equipment_metrics")
       },
       () => scoped(wh.load("silver", "feedback"), "feedback").foreach { s =>
-        wh.overwrite(SilverToGold.factCustomerFeedback(s), "gold", "fact_customer_feedback")
+        overwriteScoped(SilverToGold.factCustomerFeedback(s), "fact_customer_feedback", "feedback")
       })
 
     // promo-grain fact + feature tables: rebuilt whole each cycle, but

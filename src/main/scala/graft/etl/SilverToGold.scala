@@ -127,8 +127,8 @@ object SilverToGold {
   /** Maintained compact aggregate: per-(customer, date) visit counts from
     * silver sales. Grain includes `date`, so a partition-scoped recompute
     * of a day is exact even when late events land in an old partition —
-    * the property that lets the pipeline maintain it with dynamic
-    * partition overwrite instead of re-scanning event-grain history.
+    * the property that lets the pipeline maintain it with a dated
+    * overwrite instead of re-scanning event-grain history.
     */
   def aggCustomerDaily(silverSales: DataFrame): DataFrame =
     silverSales

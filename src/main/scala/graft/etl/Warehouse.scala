@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Parquet-backed warehouse replacing the reference's Iceberg catalog
   * (`local.bronze/silver/gold.*` — spark-defaults.conf:1-5). Tables are
-  * date-partitioned directories; overwrites are partition-scoped via
-  * dynamic partition overwrite. Keyed writes go through [[merge]], the
+  * date-partitioned directories. Every [[overwrite]] states its scope,
+  * as an Iceberg write does: the whole table or a list of dates, written
+  * aside and swapped in by rename. Keyed writes go through [[merge]], the
   * one `MERGE INTO`: new keys land as an append, and replaced versions
   * rewrite only the dates of the new and the replaced rows — the
   * property that keeps rewrite amplification bounded at 100 TB.
@@ -121,9 +122,9 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * locally sorted) on the join keys, so recurring fact⋈fact joins and
     * key-grain aggregations plan with NO shuffle exchange — at 100 TB
     * this converts the daily feature build's widest shuffle into a
-    * local merge. Full-table overwrite (bucketed tables trade dynamic
-    * partition overwrite for co-location; use the path-based
-    * [[overwrite]] where partition-scoped rewrite matters more).
+    * local merge. Full-table overwrite (bucketed tables trade the dated
+    * overwrite for co-location; use the path-based [[overwrite]] where
+    * partition-scoped rewrite matters more).
     */
   /** Pre-shuffle onto the bucket function before a bucketed write:
     * `repartition(buckets, keys)` is the SAME Murmur3-mod expression the
@@ -225,19 +226,6 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   def dropCatalogDb(): Unit =
     spark.sql(s"DROP DATABASE IF EXISTS $catalogDb CASCADE")
 
-  /** Full-replace snapshot write: deletes any existing table directory
-    * before writing, so the result is exactly `df` regardless of what
-    * partitions a previous snapshot held (dynamic partition overwrite
-    * would merge instead). Only safe when `df` does not read from the
-    * target path — snapshot targets whose source is another table.
-    */
-  def replaceSnapshot(df: DataFrame, layer: String, table: String): Unit = {
-    dropCatalogEntry(layer, table)
-    val target = new Path(path(layer, table))
-    fs(target).delete(target, true)
-    df.write.mode("overwrite").parquet(target.toString)
-  }
-
   /** A frame carrying `date`, clustered by it (the class's write
     * distribution). `rebalance`, not `repartition`: AQE may still split
     * a date above the advisory size, so one task never holds a whole
@@ -256,47 +244,59 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       .parquet(path(layer, table))
   }
 
-  /** Full overwrite (dims) or dynamic partition overwrite (facts with a
-    * `date` column + partitionOverwriteMode=dynamic from GraftSession),
-    * the latter clustered by [[byDate]].
-    *
-    * Non-partitioned (static) overwrite deletes the target directory
-    * BEFORE the write job runs, so a df derived from the target itself —
-    * the SCD2 dim-evolution path, which reads the current dim and writes
-    * the merged dim back — would read a deleted input mid-job. For that
-    * case the write is staged to a sibling directory and swapped in with
-    * two renames (atomic per rename on HDFS/local; last-writer-wins on
-    * object stores). Dynamic partition overwrite has no such hazard: it
-    * stages files and only swaps partition contents at job commit.
+  /** Whole-table replace (Iceberg's `replace`): the table becomes exactly
+    * `df`, clustered by [[byDate]], whatever dates it held before.
     */
   def overwrite(df: DataFrame, layer: String, table: String): Unit =
-    overwrite(byDate(df), layer, table, Map.empty)
+    replace(byDate(df), layer, table, None, Map.empty)
 
-  /** [[overwrite]] with per-write writer options and the caller's own
-    * distribution (no [[byDate]] clustering).
+  /** Date-scoped replace (Iceberg's `overwrite(date IN dates)`): each of
+    * `dates` becomes exactly `df`'s rows for it (none: the date is
+    * deleted), other dates stay. A row outside `dates`, null included,
+    * fails the write before anything is swapped.
     */
-  private def overwrite(
-      df: DataFrame, layer: String, table: String, options: Map[String, String]): Unit = {
+  def overwrite(df: DataFrame, layer: String, table: String, dates: Seq[java.sql.Date]): Unit =
+    replace(byDate(df), layer, table, Some(dates), Map.empty)
+
+  /** The one replace commit, with per-write writer options and the
+    * caller's distribution: `df` is written to a sibling stage directory,
+    * then swapped in by two renames, the whole table or each named `date=`
+    * directory. So a frame may read its own target (the SCD2 dims do).
+    * Renames are atomic on HDFS and local disk, last-writer-wins on S3.
+    */
+  private def replace(df: DataFrame, layer: String, table: String,
+      dates: Option[Seq[java.sql.Date]], options: Map[String, String]): Unit = {
     dropCatalogEntry(layer, table)
-    val target = new Path(path(layer, table))
-    val w = df.write.options(options).mode("overwrite")
-    if (df.columns.contains("date")) {
-      w.partitionBy("date").parquet(target.toString)
-    } else {
-      val filesystem = fs(target)
-      if (!filesystem.exists(target)) {
-        w.parquet(target.toString)
-      } else {
-        val stage = new Path(target.getParent, target.getName + ".__stage__")
-        val old   = new Path(target.getParent, target.getName + ".__old__")
-        filesystem.delete(stage, true)
-        filesystem.delete(old, true)
-        w.parquet(stage.toString)
-        filesystem.rename(target, old)
-        filesystem.rename(stage, target)
-        filesystem.delete(old, true)
-      }
+    val target     = new Path(path(layer, table))
+    val filesystem = fs(target)
+    val stage      = new Path(target.getParent, target.getName + ".__stage__")
+    val old        = new Path(target.getParent, target.getName + ".__old__")
+    def clean(): Unit = Seq(stage, old).foreach(filesystem.delete(_, true))
+    def move(from: Path, to: Path): Unit =
+      if (!filesystem.rename(from, to)) throw new java.io.IOException(s"rename $from -> $to failed")
+    // `from` takes the place of `to`; an absent `from` leaves `to` deleted
+    def swap(from: Path, to: Path, aside: Path): Unit = {
+      if (filesystem.exists(to)) move(to, aside)
+      if (filesystem.exists(from)) move(from, to)
     }
+    clean()
+    val w = df.write.options(options).mode("overwrite")
+    (if (df.columns.contains("date")) w.partitionBy("date") else w).parquet(stage.toString)
+    dates match {
+      case None => swap(stage, target, old)
+      case Some(ds) =>
+        val named   = ds.map(d => s"date=$d").toSet
+        // anything but a named `date=` directory or a marker (`_SUCCESS`)
+        val outside = filesystem.listStatus(stage).map(_.getPath.getName)
+          .filterNot(n => named(n) || n.startsWith("_") || n.startsWith("."))
+        if (outside.nonEmpty) clean()
+        require(outside.isEmpty,
+          s"overwrite of $layer.$table wrote ${outside.mkString(", ")} outside its dates")
+        filesystem.mkdirs(target)
+        filesystem.mkdirs(old)
+        named.foreach(n => swap(new Path(stage, n), new Path(target, n), new Path(old, n)))
+    }
+    clean()
   }
 
   /** Keyed `MERGE INTO layer.table USING source ON keys`, insert-only or
@@ -310,9 +310,11 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     *  3. The rows are persisted, one collect gives the dates the commit
     *     touches (the rows' and the replaced versions'), and
     *     `beforeCommit(rows, dates)` runs. An empty batch stops here.
-    *  4. No version replaced: one append. Otherwise only those dates are
-    *     rewritten, `target[dates]` minus the batch's keys plus the batch
-    *     (a table without `date` whole). Returns the dates.
+    *  4. No version replaced: one append. Otherwise one dated
+    *     [[overwrite]] of those dates, `target[dates]` minus the batch's
+    *     keys plus the batch, so a date the batch moved every key off is
+    *     deleted (a table without `date` is replaced whole). Returns the
+    *     dates.
     */
   def merge(
       source: DataFrame,
@@ -352,15 +354,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         beforeCommit(rows, dates)
         if (!marks.exists(_.toSeq.contains(true))) append(rows, layer, table)
         else {
-          val scope = if (!rows.columns.contains("date")) target.get
-            else target.get.where(col("date").isin(dates: _*))
-          def files(dir: Path) =
-            if (fs(dir).exists(dir)) fs(dir).listStatus(dir).map(_.getPath.getName).toSet else Set.empty[String]
-          val before = dates.map(d => new Path(path(layer, table), s"date=$d")).map(dir => dir -> files(dir))
-          overwrite(scope.join(rows.select(keyCols: _*), keys, "left_anti").unionByName(rows), layer, table)
-          // dynamic partition overwrite leaves a date the frame has no
-          // row for as it was; a rewritten date holds only new files
-          before.foreach { case (dir, old) => if (files(dir).subsetOf(old)) fs(dir).delete(dir, true) }
+          def merged(scope: DataFrame) =
+            scope.join(rows.select(keyCols: _*), keys, "left_anti").unionByName(rows)
+          if (!rows.columns.contains("date")) overwrite(merged(target.get), layer, table)
+          else overwrite(merged(target.get.where(col("date").isin(dates: _*))), layer, table, dates)
         }
       }
       dates
@@ -407,11 +404,11 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * the incremental gold build has (a full-table rewrite per 2-hour
     * cycle was this method's round-13 scale bug). Needy partitions
     * rewrite into ceil(partitionBytes / targetBytes) files via the
-    * deterministic maxRecordsPerFile budget, and the swap is the
-    * dynamic-partition-overwrite commit — readers never observe a
-    * partial partition. Non-partitioned tables still coalesce whole
-    * through the stage-and-swap path (they are snapshots, rewritten by
-    * their writers anyway). Returns (filesBefore, filesAfter).
+    * deterministic maxRecordsPerFile budget, committed by the dated
+    * stage-and-swap of exactly the needy dates — readers never observe a
+    * partial partition. Non-partitioned tables coalesce whole through
+    * the same swap (they are snapshots, rewritten by their writers
+    * anyway). Returns (filesBefore, filesAfter).
     */
   def compact(layer: String, table: String, targetBytes: Long = 128L << 20): (Long, Long) = {
     require(targetBytes > 0, "targetBytes must be positive")
@@ -450,12 +447,13 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         val needyBytes = byPart.collect { case (dir, fs) if needyDirs(dir) => fs.map(_.getLen).sum }.sum
         val sub        = df.where(col("date").isin(needyDates: _*))
         // one task per needy day (AQE may merge small days — harmless:
-        // the writer still splits by partition dir); dynamic partition
-        // overwrite swaps ONLY these partitions
-        overwrite(sub.repartition(col("date")), layer, table, budget(needyBytes, sub.count()))
+        // the writer still splits by partition dir); the swap replaces
+        // ONLY these partitions
+        replace(sub.repartition(col("date")), layer, table, Some(needyDates),
+          budget(needyBytes, sub.count()))
       }
     } else {
-      overwrite(df.coalesce(1), layer, table, budget(before.map(_.getLen).sum, df.count()))
+      replace(df.coalesce(1), layer, table, None, budget(before.map(_.getLen).sum, df.count()))
     }
     (before.size.toLong, parquetFiles(target).size.toLong)
   }

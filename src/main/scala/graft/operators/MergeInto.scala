@@ -9,8 +9,8 @@ import org.apache.spark.sql.expressions.Window
   * `silver_to_gold.py:94-99, 278-285` — SURVEY.md §2.9 M1-M3).
   *
   * All three variants are pure DataFrame→DataFrame transforms: the caller
-  * re-writes the result (partition-scoped with dynamic partition
-  * overwrite). Nothing here collects to the driver, so the same code runs
+  * re-writes the result (partition-scoped with a dated
+  * `Warehouse.overwrite`). Nothing here collects to the driver, so the same code runs
   * on a 1000-executor cluster; the shuffles are exactly the key-hash
   * exchanges MERGE needs anyway. At 100 TB the write side should be
   * partition-pruned: merge only the partitions the source touches.

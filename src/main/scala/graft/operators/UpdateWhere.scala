@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * Spark parquet tables are immutable, so UPDATE is a projection:
   * every assignment becomes `when(cond, newValue).otherwise(oldValue)`.
-  * The caller overwrites only the affected partitions (dynamic partition
-  * overwrite) — at 100 TB the predicate should include the partition
+  * The caller overwrites only the affected partitions (a dated
+  * `Warehouse.overwrite`) — at 100 TB the predicate should include the partition
   * column so the rewrite is partition-pruned, not a full-table rewrite.
   * The medallion pipeline never flips `processing_status` this way: a
   * bronze row counts as processed once its key is in silver.

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Warehouse storage layout: a date-partitioned write leaves one file
-  * per date, a table opens without a schema job, and the count report
-  * is one scan of every table.
+  * per date, an overwrite replaces exactly the scope it states, a table
+  * opens without a schema job, and the count report is one scan of every
+  * table.
   */
 class WarehouseLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -42,6 +43,57 @@ class WarehouseLayoutSpec extends AnyFunSuite {
       assert(files.length === 1, s"${d.getName}: ${files.map(_.getName).mkString(", ")}")
     }
     assert(w.load("bronze", "clustered").count() === 200L)
+  }
+
+  private def day(i: Int) = java.sql.Date.valueOf(f"2024-05-$i%02d")
+
+  /** Ten (id, date, v) rows on each of the given days of May 2024. */
+  private def onDays(days: Int*): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    days.flatMap(i => (0 until 10).map(j => (i * 100 + j, day(i), j * 0.5))).toDF("id", "date", "v")
+  }
+
+  private def dates(w: Warehouse, table: String): Set[String] =
+    w.load("bronze", table).select(col("date").cast("string")).distinct().collect()
+      .map(_.getString(0)).toSet
+
+  /** Every file under a table's directory, by path relative to it. */
+  private def files(w: Warehouse, table: String): Map[String, Set[String]] = {
+    val root = new java.io.File(w.path("bronze", table))
+    root.listFiles().filter(_.isDirectory).map(d => d.getName -> d.list().toSet).toMap +
+      ("" -> root.listFiles().filter(_.isFile).map(_.getName).toSet)
+  }
+
+  test("a whole overwrite replaces every date the table held") {
+    val w = new Warehouse(spark, freshRoot())
+    w.overwrite(onDays(1, 2, 3, 4, 5), "bronze", "t")
+    w.overwrite(onDays(4, 5, 6), "bronze", "t")
+    assert(dates(w, "t") === Set(4, 5, 6).map(i => day(i).toString))
+    assert(w.load("bronze", "t").count() === 30L)
+  }
+
+  test("a dated overwrite deletes a named date it has no rows for and leaves the others' files") {
+    val w = new Warehouse(spark, freshRoot())
+    w.overwrite(onDays(1, 2, 3, 4, 5), "bronze", "t")
+    val before = files(w, "t")
+    w.overwrite(onDays(3).where(col("id") < 305), "bronze", "t", Seq(day(2), day(3)))
+    val after = files(w, "t")
+    assert(dates(w, "t") === Set(1, 3, 4, 5).map(i => day(i).toString))
+    assert(w.load("bronze", "t").where(col("date") === day(3)).count() === 5L)
+    Seq(1, 4, 5).map(i => s"date=${day(i)}").foreach(d => assert(after(d) === before(d), d))
+    assert(!after.contains(s"date=${day(2)}"))
+  }
+
+  test("a dated overwrite with a row outside its dates throws and leaves every file") {
+    val w = new Warehouse(spark, freshRoot())
+    w.overwrite(onDays(1, 2, 3), "bronze", "t")
+    val before = files(w, "t")
+    assertThrows[IllegalArgumentException] {
+      w.overwrite(onDays(2, 4), "bronze", "t", Seq(day(2)))
+    }
+    assert(files(w, "t") === before)
+    assert(new java.io.File(w.path("bronze", "")).list().toSet === Set("t"))
+    assert(w.load("bronze", "t").count() === 30L)
   }
 
   test("after runAll every table loads with the inferred schema and no Spark job") {

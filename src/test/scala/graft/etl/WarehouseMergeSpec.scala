@@ -87,6 +87,65 @@ class WarehouseMergeSpec extends AnyFunSuite {
     }
   }
 
+  test("inventory rows all re-sent twenty days later leave their old date empty in silver and gold") {
+    val whInc  = freshWarehouse()
+    val whFull = freshWarehouse()
+    val runs   = Seq(whInc -> true, whFull -> false)
+    def cycle(asOf: String)(prepare: Warehouse => Unit): Unit = runs.foreach { case (wh, inc) =>
+      val p = new Pipeline(wh)
+      prepare(wh)
+      p.bronzeToSilver()
+      if (inc) p.silverToGoldIncremental(java.sql.Date.valueOf(asOf))
+      else p.silverToGold(java.sql.Date.valueOf(asOf))
+    }
+    cycle("2025-06-20")(wh => new Pipeline(wh).initBronze(nSales = 500, nInventory = 200,
+      nEquipment = 100, nFeedback = 50))
+    val oldDay = whInc.load("silver", "inventory_updates").agg(min(col("date"))).first().getDate(0)
+    cycle("2025-06-21") { wh =>
+      wh.append(wh.load("bronze", "inventory_updates").where(col("date") === oldDay)
+        .withColumn("date", date_add(col("date"), 20))
+        .withColumn("event_time", col("event_time") + expr("INTERVAL 20 DAYS"))
+        .withColumn("ingestion_time", col("ingestion_time") + expr("INTERVAL 20 DAYS")),
+        "bronze", "inventory_updates")
+    }
+
+    def countsByDate(df: DataFrame): Map[java.sql.Date, Long] =
+      df.groupBy(col("date")).count().collect().map(r => r.getDate(0) -> r.getLong(1)).toMap
+    runs.foreach { case (wh, inc) =>
+      val silver = wh.load("silver", "inventory_updates")
+      assert(!countsByDate(silver).contains(oldDay), s"silver kept $oldDay")
+      assert(countsByDate(wh.load("gold", "fact_inventory")) ===
+        countsByDate(SilverToGold.factInventory(silver)),
+        s"fact_inventory (incremental = $inc) differs from silver")
+      Seq("fact_inventory", "agg_inventory_daily").foreach { t =>
+        assert(wh.load("gold", t).where(col("date") === oldDay).count() === 0L,
+          s"gold/$t (incremental = $inc) kept $oldDay")
+      }
+    }
+    Seq("fact_inventory", "agg_inventory_daily", "product_demand_features").foreach { t =>
+      assert(canonical(whInc.load("gold", t)) === canonical(whFull.load("gold", t)),
+        s"gold/$t differs from the full rebuild")
+    }
+  }
+
+  test("sales rows without a date land in silver and stay out of the per-date quality state") {
+    val wh = freshWarehouse()
+    val p  = new Pipeline(wh)
+    p.initBronze(nSales = 300, nInventory = 60, nEquipment = 60, nFeedback = 30)
+    p.bronzeToSilver()
+    p.appendBronzeSales(Generators.salesEvents(spark, 5, baseTs = "2025-08-01 00:00:00",
+      idOffset = 9000000L)
+      .withColumn("event_time", lit(null).cast("timestamp"))
+      .withColumn("date", lit(null).cast("date")))
+    p.bronzeToSilver()
+    val silver = wh.load("silver", "sales_events")
+    assert(silver.where(col("date").isNull).count() === 5L)
+    assert(wh.load("silver", "agg_quality_daily").where(col("date").isNull).count() === 0L)
+    val dated = silver.where(col("date").isNotNull)
+      .agg(avg(col("data_quality_score"))).first().getDouble(0)
+    assert(math.abs(p.qualityGate(0.0) - dated) < 1e-9)
+  }
+
   private def d(day: Int) = java.sql.Date.valueOf(f"2025-03-$day%02d")
 
   /** (key, version, day of March) rows with a `date` column. */
