@@ -27,9 +27,39 @@ import org.apache.spark.sql.functions._
   * table's driver-side analysis, planning and codegen runs while
   * another's tasks hold the cores. No two of them write the same table
   * root.
+  *
+  * Interpreted while bronze is small. Every plan of a cycle over a small
+  * warehouse touches at most a few thousand rows, so compiling its
+  * generated code costs more than running it interpreted. The Pipeline
+  * therefore picks its session once, when it is built: if the bytes under
+  * `<root>/bronze` are at most the caller's
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the size the engine
+  * already treats as one task's worth of data, every stage runs through a
+  * private [[Warehouse]] on a child of the caller's session
+  * (`newSession()`). It carries the caller's modifiable runtime SQL confs
+  * with whole-stage codegen off and the expression factory mode
+  * `NO_CODEGEN`. Otherwise the Pipeline uses the caller's warehouse
+  * unchanged. The caller's session is never reconfigured, so queries
+  * outside the Pipeline compile as before. Limits of the rule:
+  *  - The choice is made once per Pipeline; [[RunPipeline]] builds one
+  *    per run, so a warehouse that outgrows the size compiles from the
+  *    next run on.
+  *  - A Pipeline built over an empty warehouse interprets, even if
+  *    [[initBronze]] is then asked for millions of rows.
+  *  - A frame the caller builds, such as the batch handed to
+  *    [[appendBronzeSales]], lives in the caller's session and compiles
+  *    there; in a JVM that runs nothing else, that append is where the
+  *    first Janino compile (and its warm-up) lands.
   */
-final class Pipeline(wh: Warehouse) {
+final class Pipeline(callerWh: Warehouse) {
   import Pipeline.concurrently
+
+  /** True when this Pipeline runs its stages without generated code. */
+  val interpreted: Boolean = Pipeline.fitsOneTask(callerWh)
+
+  private val wh: Warehouse =
+    if (interpreted) new Warehouse(Pipeline.interpretedSession(callerWh.spark), callerWh.root)
+    else callerWh
 
   private def spark: SparkSession = wh.spark
 
@@ -212,7 +242,8 @@ final class Pipeline(wh: Warehouse) {
   /** G1 stage 3, full-rebuild form: every fact partition and aggregate is
     * recomputed from full silver. Kept as the reference semantics the
     * incremental build must hash-match; [[runAll]] uses
-    * [[silverToGoldIncremental]].
+    * [[silverToGoldIncremental]]. Like it, the facts and their aggregates
+    * leave out silver rows without a date (silver keeps them).
     */
   def silverToGold(asOf: java.sql.Date): Unit = buildGold(asOf, None)
 
@@ -241,9 +272,10 @@ final class Pipeline(wh: Warehouse) {
     val silverSales = wh.load("silver", "sales_events")
     // history-sized frame scoped to a domain's pending date partitions:
     // None = nothing to do this cycle; literal isin so the parquet scan
-    // partition-prunes statically (no reliance on runtime DPP)
+    // partition-prunes statically (no reliance on runtime DPP). Both paths
+    // leave out rows without a date: no pending date names them
     def scoped(df: DataFrame, domain: String): Option[DataFrame] = pending match {
-      case None => Some(df)
+      case None => Some(df.where(col("date").isNotNull))
       case Some(p) =>
         val dates = p.getOrElse(domain, Nil)
         if (dates.isEmpty) None else Some(df.where(col("date").isin(dates: _*)))
@@ -465,6 +497,28 @@ final class Pipeline(wh: Warehouse) {
 }
 
 object Pipeline {
+
+  /** True when the bytes under `<root>/bronze` (none when it is absent)
+    * are at most the caller's advisory partition size.
+    */
+  private def fitsOneTask(wh: Warehouse): Boolean = {
+    val bronze = new org.apache.hadoop.fs.Path(wh.root, "bronze")
+    val fs     = bronze.getFileSystem(wh.spark.sparkContext.hadoopConfiguration)
+    val bytes  = if (fs.exists(bronze)) fs.getContentSummary(bronze).getLength else 0L
+    bytes <= org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      wh.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+  }
+
+  /** A child of `caller` with its modifiable runtime SQL confs, whole-stage
+    * codegen off and expressions evaluated interpreted.
+    */
+  private def interpretedSession(caller: SparkSession): SparkSession = {
+    val child = caller.newSession()
+    caller.conf.getAll.foreach { case (k, v) => if (caller.conf.isModifiable(k)) child.conf.set(k, v) }
+    child.conf.set("spark.sql.codegen.wholeStage", "false")
+    child.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    child
+  }
 
   /** Runs `steps` at once, each on a fresh thread started by the calling
     * thread, and returns when every one has finished. Fresh threads

@@ -1,12 +1,16 @@
 package graft.etl
 
 import graft.GraftSession
+import org.apache.spark.graft.JobMeter
 
 /** CLI entry point for the medallion pipeline (SURVEY.md §7 step 8):
   * seeds bronze with the deterministic generators, runs
   * bronze→silver→gold with the quality gate, prints the count report.
   * `increment` instead appends a later sales window to an existing
-  * warehouse and runs the same cycle over it.
+  * warehouse and runs the same cycle over it. After the cycle one
+  * `[cycle]` line gives its jobs, the wall during which a job ran, the
+  * task time, the classes compiled and whether the Pipeline interpreted
+  * its plans or compiled them (see [[Pipeline]]).
   *
   * Usage: runMain graft.etl.RunPipeline <warehouseDir> [nSales | <csv> | increment]
   */
@@ -33,7 +37,13 @@ object RunPipeline {
         pipe.initBronze(nSales, nSales / 4, nSales / 2, nSales / 10)
         seedAsOf
     }
+    val meter = JobMeter(spark.sparkContext)
+    meter.reset()
     val report = pipe.runAll(asOf)
+    val cycle  = meter.read()
+    println(f"[cycle] jobs=${cycle.jobs.size} busy=${cycle.busyMs / 1e3}%.2f s " +
+      f"taskSum=${cycle.taskMs / 1e3}%.2f s compiled=${cycle.compiledClasses} " +
+      s"mode=${if (pipe.interpreted) "interpreted" else "compiled"}")
     report.show(50, truncate = false)
     println("=== dashboard KPIs (SURVEY §2.12) ===")
     DashboardQueries.revenueKpis(wh.load("gold", "fact_sales")).show(truncate = false)

@@ -9,7 +9,8 @@ import org.apache.spark.graft.JobMeter
   * sum, shuffle write, call site) and the job wall summed by call site —
   * the local-mode stand-in for the UI's Jobs page (spark.ui is off in
   * [[GraftSession]]). `driverGap` is the query wall outside every job:
-  * planning, codegen, collects, fixture staging.
+  * planning, codegen, collects, fixture staging; `compiled` is the
+  * number of generated classes Janino compiled for the rep.
   *
   * Usage: runMain graft.tools.QTime <queryName> [sfDir] [reps]
   */
@@ -31,7 +32,8 @@ object QTime {
       println(f"[qtime] $name rep=$i rows=$n wall=$s%.2f s " +
         f"shuffleWrite=${r.shuffleWrite / 1e6}%.2f MB " +
         f"shuffleRead=${r.shuffleRead / 1e6}%.2f MB " +
-        f"jobs=${r.jobs.size} driverGap=${s - r.busyMs / 1e3}%.2f s")
+        f"jobs=${r.jobs.size} driverGap=${s - r.busyMs / 1e3}%.2f s " +
+        s"compiled=${r.compiledClasses}")
       r.jobs.foreach { j =>
         println(f"[qtime]   job=${j.id}%-4d wall=${j.wallMs / 1e3}%6.2f s " +
           f"stages=${j.stages}%2d tasks=${j.tasks}%4d taskSum=${j.taskMs / 1e3}%7.2f s " +

@@ -17,9 +17,11 @@ final case class JobRow(id: Int, start: Long, end: Long, stages: Int, tasks: Int
 }
 
 /** The jobs seen since the last [[JobMeter.reset]], in id order, and
-  * their totals.
+  * their totals. `compiledClasses` counts the classes Janino compiled in
+  * this JVM over the same span (generated code served from Spark's code
+  * cache is not compiled again, so it does not count).
   */
-final case class JobReading(jobs: Seq[JobRow]) {
+final case class JobReading(jobs: Seq[JobRow], compiledClasses: Long) {
   def tasks: Long        = jobs.map(_.tasks.toLong).sum
   def taskMs: Long       = jobs.map(_.taskMs).sum
   def shuffleWrite: Long = jobs.map(_.shuffleWrite).sum
@@ -41,11 +43,13 @@ final case class JobReading(jobs: Seq[JobRow]) {
   * per job. Callers bracket a measured action with [[reset]] and
   * [[read]]; both drain the asynchronous listener bus first, so a
   * reading holds every event of the jobs its action ran and none of the
-  * jobs before the reset.
+  * jobs before the reset. The compile count is read from Spark's codegen
+  * metrics, not from an event, so it adds no listener and no job.
   */
 final class JobMeter private (sc: SparkContext) extends SparkListener {
   private val rows       = mutable.Map.empty[Int, JobRow]
   private val stageToJob = mutable.Map.empty[Int, Int]
+  private var compiledAtReset = JobMeter.compiled()
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val site = Option(e.properties)
@@ -73,16 +77,18 @@ final class JobMeter private (sc: SparkContext) extends SparkListener {
         site = if (j.site == "?") s.name.takeWhile(_ != ':') else j.site)
   }
 
-  /** Forgets every job seen so far. */
+  /** Forgets every job seen so far and restarts the compile count. */
   def reset(): Unit = {
     JobMeter.drain(sc)
-    synchronized { rows.clear(); stageToJob.clear() }
+    synchronized { rows.clear(); stageToJob.clear(); compiledAtReset = JobMeter.compiled() }
   }
 
   /** The jobs seen since the last [[reset]]. */
   def read(): JobReading = {
     JobMeter.drain(sc)
-    synchronized { JobReading(rows.values.toSeq.sortBy(_.id)) }
+    synchronized {
+      JobReading(rows.values.toSeq.sortBy(_.id), JobMeter.compiled() - compiledAtReset)
+    }
   }
 }
 
@@ -105,4 +111,11 @@ object JobMeter {
     * package.
     */
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(10000L)
+
+  /** Classes compiled in this JVM so far: one compilation-time sample is
+    * recorded per class Janino compiles. `CodegenMetrics` is
+    * `private[spark]`, hence this package too.
+    */
+  private def compiled(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

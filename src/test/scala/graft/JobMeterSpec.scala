@@ -48,4 +48,13 @@ class JobMeterSpec extends AnyFunSuite {
     assert(r.spill === r.jobs.map(_.spill).sum)
     assert(r.busyMs <= r.jobs.map(_.wallMs).sum)
   }
+
+  test("compiledClasses counts the classes compiled since reset()") {
+    meter.reset()
+    // literals no other test uses: generated code the codegen cache lacks
+    spark.range(0, 100, 1, 2).selectExpr("sum(id * 7919 + 104729)").collect()
+    assert(meter.read().compiledClasses > 0)
+    meter.reset()
+    assert(meter.read().compiledClasses === 0)
+  }
 }

@@ -285,4 +285,28 @@ class IncrementalGoldSpec extends AnyFunSuite {
     p.silverToGoldIncremental(java.sql.Date.valueOf("2025-07-11"))
     assert(wh.load("gold", "fact_sales").count() === silverBefore + 100)
   }
+
+  test("sales without a date stay in silver and out of gold, incremental and full alike") {
+    val whInc  = freshWarehouse()
+    val whFull = freshWarehouse()
+    val asOf   = java.sql.Date.valueOf("2025-06-20")
+    Seq(whInc -> true, whFull -> false).foreach { case (wh, inc) =>
+      val p = new Pipeline(wh)
+      p.initBronze(nSales = 300, nInventory = 100, nEquipment = 100, nFeedback = 50)
+      p.appendBronzeSales(Generators.salesEvents(spark, 5, idOffset = 7400000L)
+        .withColumn("event_time", lit(null).cast("timestamp"))
+        .withColumn("date", lit(null).cast("date")))
+      p.bronzeToSilver()
+      if (inc) p.silverToGoldIncremental(asOf) else p.silverToGold(asOf)
+    }
+    Seq(whInc, whFull).foreach { wh =>
+      assert(wh.load("silver", "sales_events").where(col("date").isNull).count() === 5)
+    }
+    Seq("fact_sales", "agg_daily_sales", "agg_customer_daily", "dim_customer").foreach { t =>
+      val inc  = canonical(whInc.load("gold", t))
+      val full = canonical(whFull.load("gold", t))
+      assert(inc.size === full.size, s"gold/$t row count (inc=${inc.size} full=${full.size})")
+      assert(inc === full, s"gold/$t")
+    }
+  }
 }

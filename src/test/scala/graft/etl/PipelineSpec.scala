@@ -224,4 +224,35 @@ class PipelineSpec extends AnyFunSuite {
     assert(cal.where(col("date") === java.sql.Date.valueOf("2025-07-04"))
       .select(col("is_holiday")).head().getBoolean(0))
   }
+
+  test("a small warehouse's cycle runs interpreted without touching the caller's session") {
+    val meter = org.apache.spark.graft.JobMeter(spark.sparkContext)
+    def freshWarehouse() =
+      new Warehouse(spark, java.nio.file.Files.createTempDirectory("graft_wh_").toString)
+    // seeds bronze, then builds the Pipeline under test over it
+    def seeded(build: Warehouse => Pipeline): Pipeline = {
+      val wh = freshWarehouse()
+      new Pipeline(wh).initBronze(nSales = 500, nInventory = 125, nEquipment = 250, nFeedback = 50)
+      build(wh)
+    }
+    def classesPerCycle(p: Pipeline): Long = {
+      meter.reset()
+      p.runAll(asOf)
+      meter.read().compiledClasses
+    }
+    val small = seeded(new Pipeline(_))
+    assert(small.interpreted)
+    // what still compiles ignores the factory mode: the unsafe-row joiner
+    // of hash aggregation and the columnar iterator of a persisted batch
+    val interpretedClasses = classesPerCycle(small)
+    assert(interpretedClasses <= 30, s"$interpretedClasses classes compiled by an interpreted cycle")
+    assert(spark.conf.get("spark.sql.codegen.wholeStage") === "true")
+    assert(spark.conf.get("spark.sql.codegen.factoryMode") === "FALLBACK")
+
+    val forced = seeded(PipelineModesSpec.compiledPipeline(spark, _))
+    assert(!forced.interpreted)
+    val compiledClasses = classesPerCycle(forced)
+    assert(compiledClasses > 100, s"$compiledClasses classes compiled by a compiled cycle")
+    info(s"classes compiled per cycle: $interpretedClasses interpreted, $compiledClasses compiled")
+  }
 }
