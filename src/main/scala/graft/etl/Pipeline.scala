@@ -28,38 +28,53 @@ import org.apache.spark.sql.functions._
   * another's tasks hold the cores. No two of them write the same table
   * root.
   *
-  * Interpreted while bronze is small. Every plan of a cycle over a small
-  * warehouse touches at most a few thousand rows, so compiling its
-  * generated code costs more than running it interpreted. The Pipeline
-  * therefore picks its session once, when it is built: if the bytes under
-  * `<root>/bronze` are at most the caller's
-  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the size the engine
-  * already treats as one task's worth of data, every stage runs through a
+  * Interpreted while bronze is small. A cycle plans about 415 classes of
+  * generated code, and over a small warehouse each plan touches a few
+  * thousand rows, so compiling the code costs more than running the plan
+  * interpreted. Each public stage therefore takes the bytes under
+  * `<root>/bronze` when it starts (one `getContentSummary`), plus what
+  * the stage itself loads (a seed's rows at a measured bytes-per-row
+  * estimate, a CSV's file size). At most
+  * [[Pipeline.MaxInterpretedBronzeBytes]], the stage runs through a
   * private [[Warehouse]] on a child of the caller's session
-  * (`newSession()`). It carries the caller's modifiable runtime SQL confs
-  * with whole-stage codegen off and the expression factory mode
-  * `NO_CODEGEN`. Otherwise the Pipeline uses the caller's warehouse
-  * unchanged. The caller's session is never reconfigured, so queries
-  * outside the Pipeline compile as before. Limits of the rule:
-  *  - The choice is made once per Pipeline; [[RunPipeline]] builds one
-  *    per run, so a warehouse that outgrows the size compiles from the
-  *    next run on.
-  *  - A Pipeline built over an empty warehouse interprets, even if
-  *    [[initBronze]] is then asked for millions of rows.
+  * (`newSession()`) that carries the caller's modifiable runtime SQL
+  * confs with whole-stage codegen off and the expression factory mode
+  * `NO_CODEGEN`; above it, through the caller's warehouse unchanged. The
+  * caller's session is never reconfigured, so queries outside the
+  * Pipeline compile as before, and a warehouse that grows past the bound
+  * compiles from its next stage on. The stages of one Pipeline run one
+  * at a time. Limits of the rule:
+  *  - It reads bronze, not the batch: past the bound even a cycle that
+  *    appends one day compiles, though at 44 MB such a cycle still ran
+  *    faster interpreted (see [[Pipeline.MaxInterpretedBronzeBytes]]).
   *  - A frame the caller builds, such as the batch handed to
   *    [[appendBronzeSales]], lives in the caller's session and compiles
   *    there; in a JVM that runs nothing else, that append is where the
   *    first Janino compile (and its warm-up) lands.
   */
-final class Pipeline(callerWh: Warehouse) {
+final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBytes: Long) {
   import Pipeline.concurrently
 
-  /** True when this Pipeline runs its stages without generated code. */
-  val interpreted: Boolean = Pipeline.fitsOneTask(callerWh)
+  def this(callerWh: Warehouse) = this(callerWh, Pipeline.MaxInterpretedBronzeBytes)
 
-  private val wh: Warehouse =
-    if (interpreted) new Warehouse(Pipeline.interpretedSession(callerWh.spark), callerWh.root)
-    else callerWh
+  private lazy val interpretedWh =
+    new Warehouse(Pipeline.interpretedSession(callerWh.spark), callerWh.root)
+
+  /** The warehouse the running stage reads and writes through. */
+  @volatile private var wh: Warehouse = callerWh
+
+  /** True when the last stage ran without generated code. */
+  def interpreted: Boolean = wh ne callerWh
+
+  /** Runs one stage through the interpreted warehouse if bronze will hold
+    * at most `maxInterpretedBronzeBytes` while it runs, else through the
+    * caller's. `extraBronzeBytes` is what the stage itself adds to bronze.
+    */
+  private def stage[T](extraBronzeBytes: Long = 0L)(body: => T): T = {
+    val bytes = Pipeline.bronzeBytes(callerWh) + extraBronzeBytes
+    wh = if (bytes <= maxInterpretedBronzeBytes) interpretedWh else callerWh
+    body
+  }
 
   private def spark: SparkSession = wh.spark
 
@@ -67,13 +82,15 @@ final class Pipeline(callerWh: Warehouse) {
     * at once.
     */
   def initBronze(nSales: Long, nInventory: Long, nEquipment: Long, nFeedback: Long,
-      nPromotions: Long = 40): Unit = concurrently(
-    () => wh.overwrite(Generators.salesEvents(spark, nSales), "bronze", "sales_events"),
-    () => wh.overwrite(Generators.inventoryUpdates(spark, nInventory), "bronze", "inventory_updates"),
-    () => wh.overwrite(Generators.equipmentMetrics(spark, nEquipment), "bronze", "equipment_metrics"),
-    () => wh.overwrite(Generators.customerFeedback(spark, nFeedback), "bronze", "customer_feedback"),
-    () => wh.overwrite(Generators.promotions(spark, nPromotions), "bronze", "promotions"),
-    () => wh.overwrite(Generators.weatherData(spark), "bronze", "weather_data"))
+      nPromotions: Long = 40): Unit =
+    stage(Pipeline.SeedBytesPerRow * (nSales + nInventory + nEquipment + nFeedback + nPromotions))(
+      concurrently(
+        () => wh.overwrite(Generators.salesEvents(spark, nSales), "bronze", "sales_events"),
+        () => wh.overwrite(Generators.inventoryUpdates(spark, nInventory), "bronze", "inventory_updates"),
+        () => wh.overwrite(Generators.equipmentMetrics(spark, nEquipment), "bronze", "equipment_metrics"),
+        () => wh.overwrite(Generators.customerFeedback(spark, nFeedback), "bronze", "customer_feedback"),
+        () => wh.overwrite(Generators.promotions(spark, nPromotions), "bronze", "promotions"),
+        () => wh.overwrite(Generators.weatherData(spark), "bronze", "weather_data")))
 
   /** Bronze tables the pipeline manages, in load order. */
   private val bronzeTables = Seq(
@@ -87,7 +104,7 @@ final class Pipeline(callerWh: Warehouse) {
     * overwrites the same snapshot (idempotent). Returns the snapshot
     * names written.
     */
-  def backupBronze(asOf: java.sql.Date): Seq[String] = {
+  def backupBronze(asOf: java.sql.Date): Seq[String] = stage() {
     val stamp = asOf.toString.replace("-", "")
     bronzeTables
       .filter(wh.exists("bronze", _))
@@ -107,6 +124,13 @@ final class Pipeline(callerWh: Warehouse) {
     */
   def initBronzeFromCsv(csvPath: String, backupAsOf: Option[java.sql.Date] = None): Unit = {
     backupAsOf.foreach(backupBronze)
+    val csv = new org.apache.hadoop.fs.Path(csvPath)
+    val csvBytes = csv.getFileSystem(callerWh.spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(csv).getLength
+    stage(csvBytes)(loadCsv(csvPath))
+  }
+
+  private def loadCsv(csvPath: String): Unit = {
     import graft.sources.CsvDemux
     val raw = CsvDemux.readCombined(spark, csvPath)
     // literal "null" strings -> real nulls (reference CSV convention)
@@ -165,13 +189,13 @@ final class Pipeline(callerWh: Warehouse) {
     * Every date a commit touches, a replaced version's date included, is
     * recorded for the gold build. The four domains run concurrently.
     */
-  def bronzeToSilver(): Unit = concurrently(
+  def bronzeToSilver(): Unit = stage()(concurrently(
     () => runDomain("sales_events", "event_id", BronzeToSilver.sales),
     () => runDomain("inventory_updates", "update_id", BronzeToSilver.inventory,
       version = Some("ingestion_time")),
     () => runDomain("equipment_metrics", "metric_id", BronzeToSilver.equipment),
     () => runDomain("feedback", "feedback_id", BronzeToSilver.feedback,
-      bronzeTable = "customer_feedback"))
+      bronzeTable = "customer_feedback")))
 
   /** One silver domain's cycle: bronze merged into silver on `keyCol`,
     * `transform` applied to the pending rows only. Before the commit:
@@ -222,7 +246,7 @@ final class Pipeline(callerWh: Warehouse) {
     * fall back to the scan once (the next bronzeToSilver cycle BACKFILLS
     * the state from all silver dates, so the average covers history).
     */
-  def qualityGate(threshold: Double = 50.0): Double = {
+  def qualityGate(threshold: Double = 50.0): Double = stage() {
     val avgScore =
       if (wh.exists("silver", "agg_quality_daily"))
         wh.load("silver", "agg_quality_daily")
@@ -245,7 +269,7 @@ final class Pipeline(callerWh: Warehouse) {
     * [[silverToGoldIncremental]]. Like it, the facts and their aggregates
     * leave out silver rows without a date (silver keeps them).
     */
-  def silverToGold(asOf: java.sql.Date): Unit = buildGold(asOf, None)
+  def silverToGold(asOf: java.sql.Date): Unit = stage()(buildGold(asOf, None))
 
   /** G1 stage 3, partition-scoped: consumes the pending-dates table the
     * bronze→silver stage wrote and recomputes ONLY those date partitions
@@ -260,7 +284,7 @@ final class Pipeline(callerWh: Warehouse) {
     * tables are rebuilt every cycle but read only seed catalogs or the
     * compact daily-grain aggregates — never event-grain history.
     */
-  def silverToGoldIncremental(asOf: java.sql.Date): Unit = {
+  def silverToGoldIncremental(asOf: java.sql.Date): Unit = stage() {
     buildGold(asOf, Some(loadPendingDates()))
     wh.drop("silver", pendingTable)
   }
@@ -420,14 +444,14 @@ final class Pipeline(callerWh: Warehouse) {
     * point each ingest cycle uses between pipeline runs.
     */
   def appendBronzeSales(batch: DataFrame): Unit =
-    wh.append(batch, "bronze", "sales_events")
+    stage()(wh.append(batch, "bronze", "sales_events"))
 
   /** G2/G5 — count report across all layers (bakery_csv_etl_pipeline.py:
     * 380-416): one scan of every existing table, tagged and counted in
     * one aggregation, returned as a local frame sorted by (layer,
     * table_name) with a 0 row for a table that exists but is empty.
     */
-  def report(): DataFrame = {
+  def report(): DataFrame = stage() {
     val tables = Seq(
       "bronze" -> "sales_events", "bronze" -> "inventory_updates",
       "bronze" -> "equipment_metrics", "bronze" -> "customer_feedback",
@@ -470,7 +494,7 @@ final class Pipeline(callerWh: Warehouse) {
     * and gold snapshots rewrite whole on every cycle. Returns (table →
     * (filesBefore, filesAfter)) for the run log.
     */
-  def maintain(targetBytes: Long = 128L << 20): Map[String, (Long, Long)] = {
+  def maintain(targetBytes: Long = 128L << 20): Map[String, (Long, Long)] = stage() {
     val appendTables = Seq(
       "bronze" -> "sales_events", "bronze" -> "inventory_updates",
       "bronze" -> "equipment_metrics", "bronze" -> "customer_feedback",
@@ -498,15 +522,32 @@ final class Pipeline(callerWh: Warehouse) {
 
 object Pipeline {
 
-  /** True when the bytes under `<root>/bronze` (none when it is absent)
-    * are at most the caller's advisory partition size.
+  /** Bronze bytes up to which a stage runs interpreted (16 MiB). Measured
+    * with [[graft.tools.InterpretCrossover]] on 4 vCPU, one fresh JVM per
+    * size and mode, seed / backfill cycle / mean of two cycles that each
+    * append 250 sales, interpreted vs compiled seconds:
+    *  - 1.8 MB of bronze: 8.8 vs 10.3, 22.2 vs 27.0, 10.9 vs 14.0;
+    *  - 7.9 MB: 12.4 vs 13.0, 30.9 vs 35.8, 12.1 vs 16.3;
+    *  - 14.3 MB: 14.0 vs 16.3, 39.3 vs 44.4, 12.7 vs 15.5;
+    *  - 20.6 MB: 17.0 vs 17.6, 49.3 vs 52.4, 14.3 vs 17.7;
+    *  - 43.8 MB: 20.5 vs 18.4, 73.3 vs 63.5, 16.4 vs 19.6.
+    * The seed and the backfill, which carry all of bronze through the
+    * plans, cross over between 20.6 and 43.8 MB; the bound sits below
+    * the largest size at which every phase ran faster interpreted.
     */
-  private def fitsOneTask(wh: Warehouse): Boolean = {
+  val MaxInterpretedBronzeBytes: Long = 16L << 20
+
+  /** Bronze parquet bytes per row [[Pipeline.initBronze]] generates, the
+    * seed's estimate of what it adds: at the proportions [[RunPipeline]]
+    * seeds in, 13.9 bytes a row at 1.7 M sales and 15.5 at 500 k.
+    */
+  private val SeedBytesPerRow: Long = 14L
+
+  /** Bytes of every file under `<root>/bronze`, 0 when it is absent. */
+  private def bronzeBytes(wh: Warehouse): Long = {
     val bronze = new org.apache.hadoop.fs.Path(wh.root, "bronze")
     val fs     = bronze.getFileSystem(wh.spark.sparkContext.hadoopConfiguration)
-    val bytes  = if (fs.exists(bronze)) fs.getContentSummary(bronze).getLength else 0L
-    bytes <= org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      wh.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    if (fs.exists(bronze)) fs.getContentSummary(bronze).getLength else 0L
   }
 
   /** A child of `caller` with its modifiable runtime SQL confs, whole-stage

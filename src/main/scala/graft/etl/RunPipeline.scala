@@ -9,8 +9,8 @@ import org.apache.spark.graft.JobMeter
   * `increment` instead appends a later sales window to an existing
   * warehouse and runs the same cycle over it. After the cycle one
   * `[cycle]` line gives its jobs, the wall during which a job ran, the
-  * task time, the classes compiled and whether the Pipeline interpreted
-  * its plans or compiled them (see [[Pipeline]]).
+  * task time, the classes compiled and whether the cycle's last stage
+  * ran interpreted or compiled (see [[Pipeline]]).
   *
   * Usage: runMain graft.etl.RunPipeline <warehouseDir> [nSales | <csv> | increment]
   */

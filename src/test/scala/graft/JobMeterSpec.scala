@@ -54,7 +54,5 @@ class JobMeterSpec extends AnyFunSuite {
     // literals no other test uses: generated code the codegen cache lacks
     spark.range(0, 100, 1, 2).selectExpr("sum(id * 7919 + 104729)").collect()
     assert(meter.read().compiledClasses > 0)
-    meter.reset()
-    assert(meter.read().compiledClasses === 0)
   }
 }

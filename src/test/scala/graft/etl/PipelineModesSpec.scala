@@ -1,14 +1,14 @@
 package graft.etl
 
 import graft.TestSpark
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A [[Pipeline]] over a small warehouse runs its stages interpreted;
-  * one built while the caller's advisory partition size is below the
-  * warehouse runs them compiled. Both must write the same tables.
+  * one whose bound is below any bronze size runs them compiled. Both
+  * must write the same tables.
   */
 class PipelineModesSpec extends AnyFunSuite {
   import PipelineModesSpec._
@@ -21,12 +21,12 @@ class PipelineModesSpec extends AnyFunSuite {
   private val silverTables = Seq("sales_events", "inventory_updates", "equipment_metrics", "feedback")
   private val asOf = java.sql.Date.valueOf("2025-06-21")
 
-  /** Seeds bronze, then `build` makes the Pipeline that runs one cycle,
-    * appends a day of sales and runs another.
+  /** The Pipeline `build` makes seeds bronze, runs one cycle, appends a
+    * day of sales and runs another.
     */
   private def cycles(wh: Warehouse, build: Warehouse => Pipeline): Pipeline = {
-    new Pipeline(wh).initBronze(nSales = 500, nInventory = 125, nEquipment = 250, nFeedback = 50)
     val p = build(wh)
+    p.initBronze(nSales = 500, nInventory = 125, nEquipment = 250, nFeedback = 50)
     p.runAll(java.sql.Date.valueOf("2025-06-20"))
     p.appendBronzeSales(Generators.salesEvents(spark, 120, days = 1,
       baseTs = "2025-06-20 00:00:00", idOffset = 6000000L))
@@ -46,7 +46,7 @@ class PipelineModesSpec extends AnyFunSuite {
     val whInt       = freshWarehouse()
     val whComp      = freshWarehouse()
     val interpreted = cycles(whInt, new Pipeline(_))
-    val compiled    = cycles(whComp, compiledPipeline(spark, _))
+    val compiled    = cycles(whComp, compiledPipeline(_))
     assert(interpreted.interpreted && !compiled.interpreted)
 
     val gold = interpreted.report().collect().collect {
@@ -62,9 +62,9 @@ class PipelineModesSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(whInt.root, l), new java.io.File(whFull.root, l))
     }
-    val full = compiledPipeline(spark, whFull)
-    assert(!full.interpreted)
+    val full = compiledPipeline(whFull)
     full.silverToGold(asOf)
+    assert(!full.interpreted)
     // the tables the incremental build scopes to pending dates; the SCD2
     // dims (and what reads them) keep the first cycle's history, which a
     // one-shot rebuild cannot have
@@ -78,18 +78,8 @@ class PipelineModesSpec extends AnyFunSuite {
 }
 
 object PipelineModesSpec {
-  private val AdvisoryPartitionSize = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-
-  /** A Pipeline built while the advisory partition size is one byte, so
-    * a warehouse with any bronze data is too big to interpret; the
-    * caller's setting is restored before it runs.
-    */
-  def compiledPipeline(spark: SparkSession, wh: Warehouse): Pipeline = {
-    val prior = spark.conf.getAll.get(AdvisoryPartitionSize)
-    spark.conf.set(AdvisoryPartitionSize, "1b")
-    try new Pipeline(wh)
-    finally prior.fold(spark.conf.unset(AdvisoryPartitionSize))(spark.conf.set(AdvisoryPartitionSize, _))
-  }
+  /** A Pipeline whose every stage compiles, whatever the bronze size. */
+  def compiledPipeline(wh: Warehouse): Pipeline = new Pipeline(wh, -1L)
 
   /** Row count and an order-insensitive hash of a frame: the sum of a
     * 64-bit hash per row over every column in name order, floating

@@ -227,32 +227,46 @@ class PipelineSpec extends AnyFunSuite {
 
   test("a small warehouse's cycle runs interpreted without touching the caller's session") {
     val meter = org.apache.spark.graft.JobMeter(spark.sparkContext)
-    def freshWarehouse() =
-      new Warehouse(spark, java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    // seeds bronze, then builds the Pipeline under test over it
-    def seeded(build: Warehouse => Pipeline): Pipeline = {
-      val wh = freshWarehouse()
-      new Pipeline(wh).initBronze(nSales = 500, nInventory = 125, nEquipment = 250, nFeedback = 50)
-      build(wh)
-    }
-    def classesPerCycle(p: Pipeline): Long = {
-      meter.reset()
-      p.runAll(asOf)
-      meter.read().compiledClasses
-    }
-    val small = seeded(new Pipeline(_))
-    assert(small.interpreted)
+    val small = new Pipeline(freshWarehouse())
+    small.initBronze(nSales = 500, nInventory = 125, nEquipment = 250, nFeedback = 50)
+    meter.reset()
+    small.runAll(asOf)
     // what still compiles ignores the factory mode: the unsafe-row joiner
     // of hash aggregation and the columnar iterator of a persisted batch
-    val interpretedClasses = classesPerCycle(small)
-    assert(interpretedClasses <= 30, s"$interpretedClasses classes compiled by an interpreted cycle")
+    val classes = meter.read().compiledClasses
+    assert(small.interpreted)
+    assert(classes <= 30, s"$classes classes compiled by an interpreted cycle")
     assert(spark.conf.get("spark.sql.codegen.wholeStage") === "true")
     assert(spark.conf.get("spark.sql.codegen.factoryMode") === "FALLBACK")
-
-    val forced = seeded(PipelineModesSpec.compiledPipeline(spark, _))
-    assert(!forced.interpreted)
-    val compiledClasses = classesPerCycle(forced)
-    assert(compiledClasses > 100, s"$compiledClasses classes compiled by a compiled cycle")
-    info(s"classes compiled per cycle: $interpretedClasses interpreted, $compiledClasses compiled")
   }
+
+  test("a Pipeline built over an empty warehouse compiles once its seed passes the bound") {
+    val meter = org.apache.spark.graft.JobMeter(spark.sparkContext)
+    val p = new Pipeline(freshWarehouse(), 10L << 10)
+    p.initBronze(nSales = 500, nInventory = 125, nEquipment = 250, nFeedback = 50)
+    assert(!p.interpreted)
+    meter.reset()
+    p.runAll(asOf)
+    val classes = meter.read().compiledClasses
+    assert(!p.interpreted)
+    assert(classes > 100, s"$classes classes compiled by a compiled cycle")
+  }
+
+  test("each stage reads the bronze size afresh: an append past the bound compiles the next stage") {
+    val wh = freshWarehouse()
+    new Pipeline(wh).initBronze(nSales = 500, nInventory = 125, nEquipment = 250, nFeedback = 50)
+    val bronze = new org.apache.hadoop.fs.Path(wh.root, "bronze")
+    val seeded = bronze.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(bronze).getLength
+    val p = new Pipeline(wh, seeded)
+    p.bronzeToSilver()
+    assert(p.interpreted)
+    p.appendBronzeSales(
+      Generators.salesEvents(spark, 100, days = 1, baseTs = "2025-06-20 00:00:00", idOffset = 7000000L))
+    p.qualityGate()
+    assert(!p.interpreted)
+  }
+
+  private def freshWarehouse(): Warehouse =
+    new Warehouse(spark, java.nio.file.Files.createTempDirectory("graft_wh_").toString)
 }
