@@ -7,6 +7,14 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §2.11 G1-G5): ordered stages, a quality gate between
   * layers, and a per-table count report.
   *
+  * One registry declares the medallion's tables, each once: the six
+  * bronze tables; the four silver domains, each with its key, version
+  * column, bronze source and transform; the nineteen gold tables, each
+  * with the tables it reads, its scope (the whole table, or a silver
+  * domain's pending dates) and its build. The seed, the backup, the
+  * bronze→silver merges, the gold build, compaction and the count report
+  * all read that list.
+  *
   * The run is incremental-by-construction END TO END. Silver is the
   * processed set: a bronze row is pending until silver holds its key
   * (inventory: at an equal or newer version), so each cycle transforms
@@ -23,10 +31,11 @@ import org.apache.spark.sql.functions._
   * each reads what the one before wrote, and compaction rewrites the
   * bronze and silver partitions the report scans. Inside a stage the
   * independent table builds overlap — the four silver domains, the gold
-  * phases' builds, the compactions — each on its own thread, so one
-  * table's driver-side analysis, planning and codegen runs while
-  * another's tasks hold the cores. No two of them write the same table
-  * root.
+  * builds, the compactions — each on its own thread, so one table's
+  * driver-side analysis, planning and codegen runs while another's tasks
+  * hold the cores. A gold build starts as soon as every table it
+  * declares is written, and reads them only then. No two of them write
+  * the same table root.
   *
   * Interpreted while bronze is small. A cycle plans about 415 classes of
   * generated code, and over a small warehouse each plan touches a few
@@ -53,7 +62,7 @@ import org.apache.spark.sql.functions._
   *    first Janino compile (and its warm-up) lands.
   */
 final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBytes: Long) {
-  import Pipeline.concurrently
+  import Pipeline.{Bronze, Gold, Inputs, Silver, TableDef, concurrently}
 
   def this(callerWh: Warehouse) = this(callerWh, Pipeline.MaxInterpretedBronzeBytes)
 
@@ -78,6 +87,98 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
 
   private def spark: SparkSession = wh.spark
 
+  private def exists(t: TableDef): Boolean = wh.exists(t.layer, t.name)
+  private def load(t: TableDef): DataFrame = wh.load(t.layer, t.name)
+  private def overwrite(df: DataFrame, t: TableDef): Unit = wh.overwrite(df, t.layer, t.name)
+
+  // The registry. Entries are declared before the entries that read them;
+  // `registry` lists them in report order.
+
+  private val bronzeSales      = Bronze("sales_events")
+  private val bronzeInventory  = Bronze("inventory_updates")
+  private val bronzeEquipment  = Bronze("equipment_metrics")
+  private val bronzeFeedback   = Bronze("customer_feedback")
+  private val bronzePromotions = Bronze("promotions")
+  private val bronzeWeather    = Bronze("weather_data")
+
+  // insert-only except inventory, where a newer `ingestion_time` replaces
+  // the silver row (T5, late data)
+  private val silverSales     = Silver("sales_events", bronzeSales, "event_id", BronzeToSilver.sales)
+  private val silverInventory = Silver("inventory_updates", bronzeInventory, "update_id",
+    BronzeToSilver.inventory, version = Some("ingestion_time"))
+  private val silverEquipment = Silver("equipment_metrics", bronzeEquipment, "metric_id", BronzeToSilver.equipment)
+  private val silverFeedback  = Silver("feedback", bronzeFeedback, "feedback_id", BronzeToSilver.feedback)
+
+  private def gold(name: String, scope: Option[Silver], inputs: TableDef*)(
+      build: Inputs => Option[DataFrame]): Gold = new Gold(name, scope, inputs.map(_.id))(build)
+
+  private val dimProduct = gold("dim_product", None)(in => Some(SilverToGold.dimProduct(spark, in.prior)))
+  private val dimStore = gold("dim_store", None)(in =>
+    Some(SilverToGold.dimStoreScd2(spark, in.prior, in.asOf)))
+  // last-7-days filter inside: partition-pruned, bounded at any scale
+  private val dimPricing = gold("dim_pricing", None, silverSales)(in =>
+    Some(SilverToGold.dimPricingScd2(in(silverSales), in.prior, in.asOf)))
+  private val dimEquipment = gold("dim_equipment", None)(_ => Some(SilverToGold.dimEquipment(spark)))
+  private val dimCalendar = gold("dim_calendar", None, silverSales)(in =>
+    calendarBounds(in).map { case (minD, maxD) => SilverToGold.dimCalendar(spark, minD, maxD) })
+  private val dimWeather = gold("dim_weather", None, bronzeWeather)(in =>
+    in.get(bronzeWeather).map(SilverToGold.dimWeather))
+  private val dimMarketing = gold("dim_marketing_events", None)(_ =>
+    Some(Generators.marketingEvents(spark, 12)))
+
+  // each domain's facts and maintained daily aggregates rewrite its
+  // pending dates; the aggregates read back the just-written fact
+  private val factSales = gold("fact_sales", Some(silverSales), silverSales, dimProduct)(in =>
+    Some(SilverToGold.factSales(in.scoped(silverSales), in(dimProduct))))
+  private val aggDailySales = gold("agg_daily_sales", Some(silverSales), factSales)(in =>
+    Some(SilverToGold.aggDailySales(in.scoped(factSales))))
+  private val aggCustomerDaily = gold("agg_customer_daily", Some(silverSales), silverSales)(in =>
+    Some(SilverToGold.aggCustomerDaily(in.scoped(silverSales))))
+  private val dimCustomer = gold("dim_customer", None, aggCustomerDaily)(in =>
+    in.get(aggCustomerDaily).map(SilverToGold.dimCustomer))
+  private val factInventory = gold("fact_inventory", Some(silverInventory), silverInventory)(in =>
+    Some(SilverToGold.factInventory(in.scoped(silverInventory))))
+  private val aggInventoryDaily = gold("agg_inventory_daily", Some(silverInventory), factInventory)(in =>
+    Some(SilverToGold.aggInventoryDaily(in.scoped(factInventory))))
+  private val factEquipment = gold("fact_equipment_performance", Some(silverEquipment), silverEquipment)(in =>
+    Some(SilverToGold.factEquipment(in.scoped(silverEquipment))))
+  private val factFeedback = gold("fact_customer_feedback", Some(silverFeedback), silverFeedback)(in =>
+    Some(SilverToGold.factCustomerFeedback(in.scoped(silverFeedback))))
+
+  // promo-grain fact + feature tables: rebuilt whole each cycle, but
+  // every history-shaped input is a maintained daily-grain aggregate
+  private val factPromotions = gold("fact_promotions", None, aggDailySales, bronzePromotions)(in =>
+    in.get(aggDailySales).map { daily =>
+      val dailyUnits = daily.groupBy(col("product_id"), col("date")).agg(sum(col("daily_units")).as("units"))
+      SilverToGold.factPromotions(in(bronzePromotions), dailyUnits, in.asOf)
+    })
+  private val productDemand = gold("product_demand_features", None,
+      aggDailySales, factPromotions, aggInventoryDaily, dimPricing, dimCalendar, dimWeather)(in =>
+    in.get(aggDailySales).map(daily => MlFeatures.productDemand(daily, in(factPromotions),
+      // degrade like the dim_weather fallback below: a warehouse
+      // whose inventory domain never produced a cycle gets an
+      // empty daily-grain frame, not a missing-path crash
+      in.get(aggInventoryDaily).getOrElse(SilverToGold.aggInventoryDaily(SilverToGold.factInventory(
+        BronzeToSilver.inventory(Generators.inventoryUpdates(spark, 0))))),
+      in(dimPricing),
+      in(dimCalendar),
+      in.get(dimWeather).getOrElse(SilverToGold.dimWeather(Generators.weatherData(spark).limit(0))))))
+  // equipment fact is already (equipment, date) grain — compact input
+  private val equipmentHealth = gold("equipment_health_features", None, factEquipment)(in =>
+    in.get(factEquipment).map(MlFeatures.equipmentHealth))
+  private val productionBatches = gold("production_batch_features", None, dimProduct, dimEquipment)(in =>
+    Some(MlFeatures.productionBatches(spark, in(dimProduct), in(dimEquipment))))
+
+  private val registry: Seq[TableDef] = Seq(
+    bronzeSales, bronzeInventory, bronzeEquipment, bronzeFeedback, bronzePromotions, bronzeWeather,
+    silverSales, silverInventory, silverEquipment, silverFeedback,
+    dimProduct, dimStore, dimPricing, dimCustomer, dimCalendar, dimEquipment, dimWeather, dimMarketing,
+    aggDailySales, aggCustomerDaily, aggInventoryDaily,
+    factSales, factInventory, factEquipment, factPromotions, factFeedback,
+    productDemand, equipmentHealth, productionBatches)
+
+  private val silverDomains: Seq[Silver] = registry.collect { case s: Silver => s }
+
   /** G5 — seed bronze from the deterministic generators, the six tables
     * at once.
     */
@@ -85,34 +186,27 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
       nPromotions: Long = 40): Unit =
     stage(Pipeline.SeedBytesPerRow * (nSales + nInventory + nEquipment + nFeedback + nPromotions))(
       concurrently(
-        () => wh.overwrite(Generators.salesEvents(spark, nSales), "bronze", "sales_events"),
-        () => wh.overwrite(Generators.inventoryUpdates(spark, nInventory), "bronze", "inventory_updates"),
-        () => wh.overwrite(Generators.equipmentMetrics(spark, nEquipment), "bronze", "equipment_metrics"),
-        () => wh.overwrite(Generators.customerFeedback(spark, nFeedback), "bronze", "customer_feedback"),
-        () => wh.overwrite(Generators.promotions(spark, nPromotions), "bronze", "promotions"),
-        () => wh.overwrite(Generators.weatherData(spark), "bronze", "weather_data")))
-
-  /** Bronze tables the pipeline manages, in load order. */
-  private val bronzeTables = Seq(
-    "sales_events", "inventory_updates", "equipment_metrics",
-    "customer_feedback", "promotions", "weather_data")
+        () => overwrite(Generators.salesEvents(spark, nSales), bronzeSales),
+        () => overwrite(Generators.inventoryUpdates(spark, nInventory), bronzeInventory),
+        () => overwrite(Generators.equipmentMetrics(spark, nEquipment), bronzeEquipment),
+        () => overwrite(Generators.customerFeedback(spark, nFeedback), bronzeFeedback),
+        () => overwrite(Generators.promotions(spark, nPromotions), bronzePromotions),
+        () => overwrite(Generators.weatherData(spark), bronzeWeather)))
 
   /** CTAS-style bronze backup (reference `bakery_csv_etl_pipeline.py:
     * 260-262` creates `<table>_backup_<ds>` copies before the day's
-    * load). Snapshots every existing bronze table into the backup layer
-    * as `<table>_<yyyymmdd>`; re-running the same day's backup
+    * load). Snapshots every existing bronze table, in load order, into the
+    * backup layer as `<table>_<yyyymmdd>`; re-running the same day's backup
     * overwrites the same snapshot (idempotent). Returns the snapshot
     * names written.
     */
   def backupBronze(asOf: java.sql.Date): Seq[String] = stage() {
     val stamp = asOf.toString.replace("-", "")
-    bronzeTables
-      .filter(wh.exists("bronze", _))
-      .map { t =>
-        val snapshot = s"${t}_$stamp"
-        wh.overwrite(wh.load("bronze", t), "backup", snapshot)
-        snapshot
-      }
+    registry.collect { case t: Bronze if exists(t) =>
+      val snapshot = s"${t.name}_$stamp"
+      wh.overwrite(load(t), "backup", snapshot)
+      snapshot
+    }
   }
 
   /** G2 — seed bronze by demultiplexing a reference-shaped combined CSV
@@ -136,12 +230,11 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
     // literal "null" strings -> real nulls (reference CSV convention)
     val combined = raw.select(raw.columns.map(c =>
       when(col(s"`$c`") === "null", lit(null)).otherwise(col(s"`$c`")).as(c)).toSeq: _*)
-    wh.overwrite(
-      CsvDemux.sales(combined).select(Schemas.bronzeSales.fieldNames.map(col).toSeq: _*),
-      "bronze", "sales_events")
-    wh.overwrite(CsvDemux.inventory(combined), "bronze", "inventory_updates")
-    wh.overwrite(CsvDemux.equipment(combined), "bronze", "equipment_metrics")
-    wh.overwrite(CsvDemux.feedback(combined), "bronze", "customer_feedback")
+    overwrite(CsvDemux.sales(combined).select(Schemas.bronzeSales.fieldNames.map(col).toSeq: _*),
+      bronzeSales)
+    overwrite(CsvDemux.inventory(combined), bronzeInventory)
+    overwrite(CsvDemux.equipment(combined), bronzeEquipment)
+    overwrite(CsvDemux.feedback(combined), bronzeFeedback)
   }
 
   /** Small state table recording which date partitions each cycle's
@@ -183,22 +276,15 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
         .groupBy(_._1)
         .map { case (d, rows) => d -> rows.map(_._2).toSeq.sortBy(_.getTime) }
 
-  /** G1 stage 2 — Bronze→Silver: each domain's bronze merged into silver
-    * on its key ([[Warehouse.merge]]), insert-only except inventory, where
-    * a newer `ingestion_time` replaces the silver row (T5, late data).
-    * Every date a commit touches, a replaced version's date included, is
-    * recorded for the gold build. The four domains run concurrently.
+  /** G1 stage 2 — Bronze→Silver: each silver domain's bronze source
+    * merged into it on its key ([[Warehouse.merge]]). Every date a commit
+    * touches, a replaced version's date included, is recorded for the gold
+    * build. The four domains run concurrently.
     */
-  def bronzeToSilver(): Unit = stage()(concurrently(
-    () => runDomain("sales_events", "event_id", BronzeToSilver.sales),
-    () => runDomain("inventory_updates", "update_id", BronzeToSilver.inventory,
-      version = Some("ingestion_time")),
-    () => runDomain("equipment_metrics", "metric_id", BronzeToSilver.equipment),
-    () => runDomain("feedback", "feedback_id", BronzeToSilver.feedback,
-      bronzeTable = "customer_feedback")))
+  def bronzeToSilver(): Unit = stage()(concurrently(silverDomains.map(d => () => runDomain(d)): _*))
 
-  /** One silver domain's cycle: bronze merged into silver on `keyCol`,
-    * `transform` applied to the pending rows only. Before the commit:
+  /** One silver domain's cycle: bronze merged into silver on its key,
+    * its transform applied to the pending rows only. Before the commit:
     *  1. the batch's dates go into the pending-dates table;
     *  2. for sales, the batch dates' quality aggregate, computed from
     *     their silver rows plus the batch — sales is insert-only, so
@@ -207,35 +293,28 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
     * rewrites steps 1-2 identically. Keys a partly committed append
     * missed stay pending too, so the next run adds exactly those rows.
     */
-  private def runDomain(
-      name: String,
-      keyCol: String,
-      transform: DataFrame => DataFrame,
-      bronzeTable: String = "",
-      version: Option[String] = None
-  ): Unit =
-    wh.merge(wh.load("bronze", if (bronzeTable.nonEmpty) bronzeTable else name), "silver", name,
-      Seq(keyCol), version, transform, (batch, batchDates) => {
-        recordPendingDates(name, batchDates)
-        // maintained quality state: per-date exact (score sum, count) in
-        // decimal over the rows that have a date, so the gate reads O(days)
-        // rows, not all of silver. A warehouse PREDATING the aggregate
-        // backfills from ALL silver dates once: seeded from the batch
-        // alone, the gate's average would leave history out for good.
-        if (name == "sales_events") {
-          val scores   = Seq(col("date"), col("data_quality_score"))
-          val backfill = !wh.exists("silver", "agg_quality_daily")
-          val history = Option.when(wh.exists("silver", name))(wh.load("silver", name)).map(s =>
-            if (backfill) s else s.where(col("date").isin(batchDates: _*)))
-          val scope = (history.toSeq :+ batch).map(_.select(scores: _*)).reduce(_ unionByName _)
-          val daily = scope.where(col("date").isNotNull).groupBy(col("date")).agg(
-            sum(col("data_quality_score")
-              .cast(org.apache.spark.sql.types.DecimalType(28, 6))).as("score_sum"),
-            count(lit(1)).as("n"))
-          if (backfill) wh.overwrite(daily, "silver", "agg_quality_daily")
-          else wh.overwrite(daily, "silver", "agg_quality_daily", batchDates)
-        }
-      })
+  private def runDomain(d: Silver): Unit =
+    wh.merge(load(d.source), d.layer, d.name, Seq(d.key), d.version, d.transform, (batch, batchDates) => {
+      recordPendingDates(d.name, batchDates)
+      // maintained quality state: per-date exact (score sum, count) in
+      // decimal over the rows that have a date, so the gate reads O(days)
+      // rows, not all of silver. A warehouse PREDATING the aggregate
+      // backfills from ALL silver dates once: seeded from the batch
+      // alone, the gate's average would leave history out for good.
+      if (d eq silverSales) {
+        val scores   = Seq(col("date"), col("data_quality_score"))
+        val backfill = !wh.exists("silver", "agg_quality_daily")
+        val history = Option.when(exists(d))(load(d)).map(s =>
+          if (backfill) s else s.where(col("date").isin(batchDates: _*)))
+        val scope = (history.toSeq :+ batch).map(_.select(scores: _*)).reduce(_ unionByName _)
+        val daily = scope.where(col("date").isNotNull).groupBy(col("date")).agg(
+          sum(col("data_quality_score")
+            .cast(org.apache.spark.sql.types.DecimalType(28, 6))).as("score_sum"),
+          count(lit(1)).as("n"))
+        if (backfill) wh.overwrite(daily, "silver", "agg_quality_daily")
+        else wh.overwrite(daily, "silver", "agg_quality_daily", batchDates)
+      }
+    })
 
   /** G3 — quality gate: the average quality score of the silver sales
     * rows that have a date must clear the threshold before gold builds
@@ -254,7 +333,7 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
           .first()
           .getDouble(0)
       else
-        wh.load("silver", "sales_events").where(col("date").isNotNull)
+        load(silverSales).where(col("date").isNotNull)
           .agg(avg(col("data_quality_score")))
           .first()
           .getDouble(0)
@@ -269,7 +348,7 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
     * [[silverToGoldIncremental]]. Like it, the facts and their aggregates
     * leave out silver rows without a date (silver keeps them).
     */
-  def silverToGold(asOf: java.sql.Date): Unit = stage()(buildGold(asOf, None))
+  def silverToGold(asOf: java.sql.Date): Unit = stage()(Pipeline.buildGold(wh, registry, asOf, None))
 
   /** G1 stage 3, partition-scoped: consumes the pending-dates table the
     * bronze→silver stage wrote and recomputes ONLY those date partitions
@@ -285,225 +364,87 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
     * compact daily-grain aggregates — never event-grain history.
     */
   def silverToGoldIncremental(asOf: java.sql.Date): Unit = stage() {
-    buildGold(asOf, Some(loadPendingDates()))
+    Pipeline.buildGold(wh, registry, asOf, Some(loadPendingDates()))
     wh.drop("silver", pendingTable)
-  }
-
-  private def buildGold(
-      asOf: java.sql.Date,
-      pending: Option[Map[String, Seq[java.sql.Date]]]
-  ): Unit = {
-    val silverSales = wh.load("silver", "sales_events")
-    // history-sized frame scoped to a domain's pending date partitions:
-    // None = nothing to do this cycle; literal isin so the parquet scan
-    // partition-prunes statically (no reliance on runtime DPP). Both paths
-    // leave out rows without a date: no pending date names them
-    def scoped(df: DataFrame, domain: String): Option[DataFrame] = pending match {
-      case None => Some(df.where(col("date").isNotNull))
-      case Some(p) =>
-        val dates = p.getOrElse(domain, Nil)
-        if (dates.isEmpty) None else Some(df.where(col("date").isin(dates: _*)))
-    }
-    // gold write of a scoped frame: its pending dates, or the whole table
-    def overwriteScoped(df: DataFrame, table: String, domain: String): Unit = pending match {
-      case None    => wh.overwrite(df, "gold", table)
-      case Some(p) => wh.overwrite(df, "gold", table, p.getOrElse(domain, Nil))
-    }
-
-    // three phases; inside each the builds read only tables an earlier
-    // phase wrote, so they overlap
-    concurrently(
-      () => wh.overwrite(SilverToGold.dimProduct(spark,
-          if (wh.exists("gold", "dim_product")) Some(wh.load("gold", "dim_product")) else None),
-        "gold", "dim_product"),
-      () => wh.overwrite(SilverToGold.dimStoreScd2(spark,
-          if (wh.exists("gold", "dim_store")) Some(wh.load("gold", "dim_store")) else None, asOf),
-        "gold", "dim_store"),
-      // last-7-days filter inside: partition-pruned, bounded at any scale
-      () => wh.overwrite(SilverToGold.dimPricingScd2(silverSales,
-          if (wh.exists("gold", "dim_pricing")) Some(wh.load("gold", "dim_pricing")) else None,
-          asOf),
-        "gold", "dim_pricing"),
-      () => wh.overwrite(SilverToGold.dimEquipment(spark), "gold", "dim_equipment"),
-      () => calendarBounds(silverSales, pending).foreach { case (minD, maxD) =>
-        wh.overwrite(SilverToGold.dimCalendar(spark, minD, maxD), "gold", "dim_calendar")
-      },
-      () => if (wh.exists("bronze", "weather_data"))
-        wh.overwrite(SilverToGold.dimWeather(wh.load("bronze", "weather_data")),
-          "gold", "dim_weather"),
-      () => wh.overwrite(Generators.marketingEvents(spark, 12), "gold", "dim_marketing_events"))
-
-    concurrently(
-      // sales: fact partitions, then the maintained daily aggregates for
-      // the same partitions (read back pruned from the just-written fact)
-      () => {
-        scoped(silverSales, "sales_events").foreach { s =>
-          // reload after the swap: dimProduct's plan pinned the
-          // PRE-overwrite file listing of gold/dim_product, which no
-          // longer exists
-          overwriteScoped(SilverToGold.factSales(s, wh.load("gold", "dim_product")),
-            "fact_sales", "sales_events")
-          overwriteScoped(
-            SilverToGold.aggDailySales(scoped(wh.load("gold", "fact_sales"), "sales_events").get),
-            "agg_daily_sales", "sales_events")
-          overwriteScoped(SilverToGold.aggCustomerDaily(s), "agg_customer_daily", "sales_events")
-        }
-        if (wh.exists("gold", "agg_customer_daily"))
-          wh.overwrite(SilverToGold.dimCustomer(wh.load("gold", "agg_customer_daily")),
-            "gold", "dim_customer")
-      },
-      () => scoped(wh.load("silver", "inventory_updates"), "inventory_updates").foreach { s =>
-        overwriteScoped(SilverToGold.factInventory(s), "fact_inventory", "inventory_updates")
-        overwriteScoped(
-          SilverToGold.aggInventoryDaily(
-            scoped(wh.load("gold", "fact_inventory"), "inventory_updates").get),
-          "agg_inventory_daily", "inventory_updates")
-      },
-      () => scoped(wh.load("silver", "equipment_metrics"), "equipment_metrics").foreach { s =>
-        overwriteScoped(SilverToGold.factEquipment(s), "fact_equipment_performance", "equipment_metrics")
-      },
-      () => scoped(wh.load("silver", "feedback"), "feedback").foreach { s =>
-        overwriteScoped(SilverToGold.factCustomerFeedback(s), "fact_customer_feedback", "feedback")
-      })
-
-    // promo-grain fact + feature tables: rebuilt whole each cycle, but
-    // every history-shaped input is a maintained daily-grain aggregate
-    concurrently(
-      () => if (wh.exists("gold", "agg_daily_sales")) {
-        val dailyUnits = wh.load("gold", "agg_daily_sales")
-          .groupBy(col("product_id"), col("date"))
-          .agg(sum(col("daily_units")).as("units"))
-        wh.overwrite(SilverToGold.factPromotions(
-            wh.load("bronze", "promotions"), dailyUnits, asOf),
-          "gold", "fact_promotions")
-
-        wh.overwrite(MlFeatures.productDemand(
-            wh.load("gold", "agg_daily_sales"), wh.load("gold", "fact_promotions"),
-            // degrade like the dim_weather fallback below: a warehouse
-            // whose inventory domain never produced a cycle gets an
-            // empty daily-grain frame, not a missing-path crash
-            if (wh.exists("gold", "agg_inventory_daily"))
-              wh.load("gold", "agg_inventory_daily")
-            else SilverToGold.aggInventoryDaily(SilverToGold.factInventory(
-              BronzeToSilver.inventory(Generators.inventoryUpdates(spark, 0)))),
-            wh.load("gold", "dim_pricing"),
-            wh.load("gold", "dim_calendar"),
-            if (wh.exists("gold", "dim_weather")) wh.load("gold", "dim_weather")
-            else SilverToGold.dimWeather(
-              Generators.weatherData(spark).limit(0))),
-          "gold", "product_demand_features")
-      },
-      // equipment fact is already (equipment, date) grain — compact input
-      () => if (wh.exists("gold", "fact_equipment_performance"))
-        wh.overwrite(MlFeatures.equipmentHealth(wh.load("gold", "fact_equipment_performance")),
-          "gold", "equipment_health_features"),
-      () => wh.overwrite(MlFeatures.productionBatches(spark,
-          wh.load("gold", "dim_product"), wh.load("gold", "dim_equipment")),
-        "gold", "production_batch_features"))
   }
 
   /** dim_calendar's spine bounds, or None when the spine needs no
     * rewrite: the full path scans silver min/max; the incremental path
     * extends the existing spine with the delta dates (no scan).
     */
-  private def calendarBounds(
-      silverSales: DataFrame,
-      pending: Option[Map[String, Seq[java.sql.Date]]]
-  ): Option[(String, String)] = pending match {
-    case None =>
-      val r = silverSales.agg(min(col("date")), max(col("date"))).first()
+  private def calendarBounds(in: Inputs): Option[(String, String)] = {
+    def silverBounds = {
+      val r = in(silverSales).agg(min(col("date")), max(col("date"))).first()
       Some((r.getDate(0).toString, r.getDate(1).toString))
-    case Some(p) =>
-      val delta = p.getOrElse("sales_events", Nil)
-      val cur =
-        if (!wh.exists("gold", "dim_calendar")) None
-        else {
-          val r = wh.load("gold", "dim_calendar")
-            .agg(min(col("date")), max(col("date"))).first()
-          Some((r.getDate(0), r.getDate(1)))
+    }
+    in.dates(silverSales) match {
+      case None => silverBounds
+      case Some(delta) =>
+        val cur = in.prior.map { cal =>
+          val r = cal.agg(min(col("date")), max(col("date"))).first()
+          (r.getDate(0), r.getDate(1))
         }
-      (cur, delta) match {
-        case (None, Nil)          => None
-        case (None, _)            =>
+        (cur, delta) match {
+          case (None, Nil)          => None
           // no existing spine to extend (warehouse predating the
           // incremental build, or a dropped calendar): the delta's
           // dates may under-span silver history, so fall back to the
           // full-path silver min/max scan rather than silently
           // shrinking dim_calendar vs full-rebuild semantics
-          val r = silverSales.agg(min(col("date")), max(col("date"))).first()
-          Some((r.getDate(0).toString, r.getDate(1).toString))
-        case (Some((lo, hi)), ds) =>
-          val nlo = (ds :+ lo).minBy(_.getTime)
-          val nhi = (ds :+ hi).maxBy(_.getTime)
-          if (nlo == lo && nhi == hi) None // spine already spans the delta
-          else Some((nlo.toString, nhi.toString))
-      }
+          case (None, _)            => silverBounds
+          case (Some((lo, hi)), ds) =>
+            val nlo = (ds :+ lo).minBy(_.getTime)
+            val nhi = (ds :+ hi).maxBy(_.getTime)
+            if (nlo == lo && nhi == hi) None // spine already spans the delta
+            else Some((nlo.toString, nhi.toString))
+        }
+    }
   }
 
   /** Append a fresh bronze batch (a later producer window) — the entry
     * point each ingest cycle uses between pipeline runs.
     */
   def appendBronzeSales(batch: DataFrame): Unit =
-    stage()(wh.append(batch, "bronze", "sales_events"))
+    stage()(wh.append(batch, bronzeSales.layer, bronzeSales.name))
 
   /** G2/G5 — count report across all layers (bakery_csv_etl_pipeline.py:
-    * 380-416): one scan of every existing table, tagged and counted in
-    * one aggregation, returned as a local frame sorted by (layer,
-    * table_name) with a 0 row for a table that exists but is empty.
+    * 380-416): one scan of every existing registry table, tagged and
+    * counted in one aggregation, returned as a local frame sorted by
+    * (layer, table_name) with a 0 row for a table that exists but is empty.
     */
   def report(): DataFrame = stage() {
-    val tables = Seq(
-      "bronze" -> "sales_events", "bronze" -> "inventory_updates",
-      "bronze" -> "equipment_metrics", "bronze" -> "customer_feedback",
-      "bronze" -> "promotions", "bronze" -> "weather_data",
-      "silver" -> "sales_events", "silver" -> "inventory_updates",
-      "silver" -> "equipment_metrics", "silver" -> "feedback",
-      "gold" -> "dim_product", "gold" -> "dim_store", "gold" -> "dim_pricing",
-      "gold" -> "dim_customer", "gold" -> "dim_calendar", "gold" -> "dim_equipment",
-      "gold" -> "dim_weather", "gold" -> "dim_marketing_events",
-      "gold" -> "agg_daily_sales", "gold" -> "agg_customer_daily",
-      "gold" -> "agg_inventory_daily",
-      "gold" -> "fact_sales", "gold" -> "fact_inventory",
-      "gold" -> "fact_equipment_performance", "gold" -> "fact_promotions",
-      "gold" -> "fact_customer_feedback",
-      "gold" -> "product_demand_features", "gold" -> "equipment_health_features",
-      "gold" -> "production_batch_features"
-    )
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val present = tables.filter { case (l, t) => wh.exists(l, t) }
+    val present = registry.filter(exists)
     val counts = present
-      .map { case (l, t) => wh.load(l, t).select(lit(l).as("layer"), lit(t).as("table_name")) }
+      .map(t => load(t).select(lit(t.layer).as("layer"), lit(t.name).as("table_name")))
       .reduceOption(_ unionByName _)
       .map(_.groupBy(col("layer"), col("table_name")).count().collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
       .getOrElse(Map.empty)
-    val rows = present.sorted.map { case (l, t) => Row(l, t, counts.getOrElse((l, t), 0L)) }
+    val rows = present.map(t => (t.layer, t.name)).sorted.map { case (l, t) =>
+      Row(l, t, counts.getOrElse((l, t), 0L))
+    }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
       StructField("layer", StringType, nullable = false),
       StructField("table_name", StringType, nullable = false),
       StructField("row_count", LongType, nullable = false))))
   }
 
-  /** Maintenance stage: compact the append-heavy bronze and silver
-    * facts. A batch write leaves one file per date (the warehouse
-    * clusters date-partitioned writes), so batch overwrites no longer
-    * fragment; what still leaves dust is streaming micro-batches and
-    * separate appends to the same date, one file each — a late silver
-    * batch adds a file to its old dates instead of rewriting them. Dims
-    * and gold snapshots rewrite whole on every cycle. Returns (table →
-    * (filesBefore, filesAfter)) for the run log.
+  /** Maintenance stage: compact the append-heavy tables, each silver
+    * domain's bronze source and the domain itself. A batch write leaves
+    * one file per date (the warehouse clusters date-partitioned writes),
+    * so batch overwrites no longer fragment; what still leaves dust is
+    * streaming micro-batches and separate appends to the same date, one
+    * file each — a late silver batch adds a file to its old dates instead
+    * of rewriting them. Dims and gold snapshots rewrite whole on every
+    * cycle. Returns (`layer.table` → (filesBefore, filesAfter)) for the
+    * run log.
     */
   def maintain(targetBytes: Long = 128L << 20): Map[String, (Long, Long)] = stage() {
-    val appendTables = Seq(
-      "bronze" -> "sales_events", "bronze" -> "inventory_updates",
-      "bronze" -> "equipment_metrics", "bronze" -> "customer_feedback",
-      "silver" -> "sales_events", "silver" -> "inventory_updates",
-      "silver" -> "equipment_metrics", "silver" -> "feedback")
     val files = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-    concurrently(appendTables
-      .filter { case (l, t) => wh.exists(l, t) }
-      .map { case (l, t) => () => files(s"$l.$t") = wh.compact(l, t, targetBytes) }: _*)
+    concurrently((silverDomains.map(_.source) ++ silverDomains).filter(exists)
+      .map(t => () => files(t.id) = wh.compact(t.layer, t.name, targetBytes)): _*)
     files.toMap
   }
 
@@ -521,6 +462,102 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
 }
 
 object Pipeline {
+
+  /** A table of the medallion, declared once in the [[Pipeline]]'s
+    * registry; `id` is `layer.name`.
+    */
+  private[etl] sealed trait TableDef {
+    def layer: String
+    def name: String
+    final def id: String = s"$layer.$name"
+  }
+
+  /** A bronze table: seeded, loaded from CSV or appended to. */
+  private[etl] final case class Bronze(name: String) extends TableDef {
+    def layer: String = "bronze"
+  }
+
+  /** A silver domain: `source` merged in on `key`, newer-wins on `version`
+    * when set, `transform` applied to the pending rows. Its name also
+    * names the domain's pending dates.
+    */
+  private[etl] final case class Silver(name: String, source: Bronze, key: String,
+      transform: DataFrame => DataFrame, version: Option[String] = None) extends TableDef {
+    def layer: String = "silver"
+  }
+
+  /** A gold table: `build` returns the frame to write, or None when there
+    * is nothing to write this cycle. It reads the `inputs` (ids of other
+    * registry entries) through [[Inputs]]. A `scope` domain makes the write
+    * a dated overwrite of that domain's pending dates, and the build is not
+    * run when there are none; without one, and on the full rebuild, the
+    * table is replaced whole.
+    */
+  private[etl] final class Gold(val name: String, val scope: Option[Silver], val inputs: Seq[String])(
+      val build: Inputs => Option[DataFrame]) extends TableDef {
+    def layer: String = "gold"
+  }
+
+  /** What a gold build reads: the tables it declares, opened when it asks
+    * for them (the runner starts it only once they are written), its own
+    * table as the build found it, and the cycle's as-of date and pending
+    * dates (None on the full rebuild). Asking for an undeclared table
+    * throws.
+    */
+  private[etl] final class Inputs(wh: Warehouse, self: Gold, val asOf: java.sql.Date,
+      pending: Option[Map[String, Seq[java.sql.Date]]]) {
+    private def open(t: TableDef): Option[DataFrame] =
+      Option.when(wh.exists(t.layer, t.name))(wh.load(t.layer, t.name))
+    private def declared(t: TableDef): TableDef = {
+      require(self.inputs.contains(t.id), s"${self.id} reads ${t.id}, which it does not declare")
+      t
+    }
+    def prior: Option[DataFrame] = open(self)
+    def apply(t: TableDef): DataFrame = wh.load(declared(t).layer, t.name)
+    def get(t: TableDef): Option[DataFrame] = open(declared(t))
+    def dates(domain: Silver): Option[Seq[java.sql.Date]] = pending.map(_.getOrElse(domain.name, Nil))
+    /** An input cut to the build's scope: the domain's pending dates (literal `isin`, so the parquet scan
+      * partition-prunes statically), or on the full rebuild every row that
+      * has a date. Both leave out rows without a date: no pending date
+      * names them.
+      */
+    def scoped(t: TableDef): DataFrame = dates(self.scope.get)
+      .fold(apply(t).where(col("date").isNotNull))(ds => apply(t).where(col("date").isin(ds: _*)))
+  }
+
+  /** Builds the gold entries of `registry` through `wh`, all at once on
+    * [[concurrently]]'s threads: each build starts once every gold table
+    * it declares is written (bronze and silver inputs are written by the
+    * stages before), so no build reads a table before its write. A failed
+    * build's dependents do not run; the others finish, and the errors are
+    * thrown as [[concurrently]] throws them. Before any build starts, an
+    * input that names no entry, or inputs that form a cycle, throw.
+    */
+  private[etl] def buildGold(wh: Warehouse, registry: Seq[TableDef], asOf: java.sql.Date,
+      pending: Option[Map[String, Seq[java.sql.Date]]]): Unit = {
+    val byId  = registry.map(t => t.id -> t).toMap
+    val golds = registry.collect { case g: Gold => g }
+    def check(id: String, readers: List[String]): Unit = byId.get(id) match {
+      case None => throw new IllegalArgumentException(s"${readers.head} reads $id, which no entry declares")
+      case Some(g: Gold) =>
+        require(!readers.contains(id), s"gold inputs form a cycle: ${(id :: readers).reverse.mkString(" -> ")}")
+        g.inputs.foreach(check(_, id :: readers))
+      case _ =>
+    }
+    golds.foreach(g => check(g.id, Nil))
+    // completed with whether the build wrote what it had to
+    val written = golds.map(g => g.id -> new java.util.concurrent.CompletableFuture[java.lang.Boolean]).toMap
+    concurrently(golds.map(g => () => {
+      var ok = false
+      try if (g.inputs.flatMap(written.get).forall(_.join())) {
+        val in    = new Inputs(wh, g, asOf, pending)
+        val dates = g.scope.flatMap(in.dates)
+        if (!dates.contains(Nil)) g.build(in).foreach(df =>
+          dates.fold(wh.overwrite(df, g.layer, g.name))(wh.overwrite(df, g.layer, g.name, _)))
+        ok = true
+      } finally written(g.id).complete(ok)
+    }): _*)
+  }
 
   /** Bronze bytes up to which a stage runs interpreted (16 MiB). Measured
     * with [[graft.tools.InterpretCrossover]] on 4 vCPU, one fresh JVM per

@@ -261,8 +261,15 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   /** The one replace commit, with per-write writer options and the
     * caller's distribution: `df` is written to a sibling stage directory,
     * then swapped in by two renames, the whole table or each named `date=`
-    * directory. So a frame may read its own target (the SCD2 dims do).
-    * Renames are atomic on HDFS and local disk, last-writer-wins on S3.
+    * directory in the order named. So a frame may read its own target (the
+    * SCD2 dims do). Renames are atomic on HDFS and local disk,
+    * last-writer-wins on S3.
+    *
+    * A swap that fails part-way throws and leaves a replaced part only in
+    * the `__old__` directory. Before the first rename a journal lists the
+    * parts the stage replaces, so the next replace of the table first puts
+    * each of them whose target is missing back, while a named date the
+    * stage has no rows for stays deleted.
     */
   private def replace(df: DataFrame, layer: String, table: String,
       dates: Option[Seq[java.sql.Date]], options: Map[String, String]): Unit = {
@@ -271,7 +278,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     val filesystem = fs(target)
     val stage      = new Path(target.getParent, target.getName + ".__stage__")
     val old        = new Path(target.getParent, target.getName + ".__old__")
-    def clean(): Unit = Seq(stage, old).foreach(filesystem.delete(_, true))
+    val journal    = new Path(target.getParent, target.getName + ".__swap__")
+    // a part of the swap under `dir`: "." is the whole table, else a `date=` directory
+    def part(dir: Path, n: String): Path = if (n == ".") dir else new Path(dir, n)
+    def clean(): Unit = Seq(stage, old, journal).foreach(filesystem.delete(_, true))
     def move(from: Path, to: Path): Unit =
       if (!filesystem.rename(from, to)) throw new java.io.IOException(s"rename $from -> $to failed")
     // `from` takes the place of `to`; an absent `from` leaves `to` deleted
@@ -279,23 +289,33 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       if (filesystem.exists(to)) move(to, aside)
       if (filesystem.exists(from)) move(from, to)
     }
+    if (filesystem.exists(journal)) {
+      val in = filesystem.open(journal)
+      val replaced = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList finally in.close()
+      replaced.filter(n => !filesystem.exists(part(target, n)) && filesystem.exists(part(old, n)))
+        .foreach(n => move(part(old, n), part(target, n)))
+    }
     clean()
     val w = df.write.options(options).mode("overwrite")
     (if (df.columns.contains("date")) w.partitionBy("date") else w).parquet(stage.toString)
-    dates match {
-      case None => swap(stage, target, old)
+    val parts = dates match {
+      case None => Seq(".")
       case Some(ds) =>
-        val named   = ds.map(d => s"date=$d").toSet
+        val named   = ds.map(d => s"date=$d").distinct
         // anything but a named `date=` directory or a marker (`_SUCCESS`)
         val outside = filesystem.listStatus(stage).map(_.getPath.getName)
-          .filterNot(n => named(n) || n.startsWith("_") || n.startsWith("."))
+          .filterNot(n => named.contains(n) || n.startsWith("_") || n.startsWith("."))
         if (outside.nonEmpty) clean()
         require(outside.isEmpty,
           s"overwrite of $layer.$table wrote ${outside.mkString(", ")} outside its dates")
         filesystem.mkdirs(target)
         filesystem.mkdirs(old)
-        named.foreach(n => swap(new Path(stage, n), new Path(target, n), new Path(old, n)))
+        named
     }
+    val out = filesystem.create(journal, true)
+    try out.write(parts.filter(n => filesystem.exists(part(stage, n))).mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    parts.foreach(n => swap(part(stage, n), part(target, n), part(old, n)))
     clean()
   }
 

@@ -267,6 +267,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(!p.interpreted)
   }
 
+  test("the registry reports the medallion's 29 tables and compacts its 8 append tables") {
+    val p = new Pipeline(freshWarehouse())
+    p.initBronze(nSales = 300, nInventory = 75, nEquipment = 150, nFeedback = 30)
+    val reported = p.runAll(asOf).collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val bronze = Seq("sales_events", "inventory_updates", "equipment_metrics", "customer_feedback",
+      "promotions", "weather_data")
+    val silver = Seq("sales_events", "inventory_updates", "equipment_metrics", "feedback")
+    val gold = Seq(
+      "dim_product", "dim_store", "dim_pricing", "dim_customer", "dim_calendar", "dim_equipment",
+      "dim_weather", "dim_marketing_events",
+      "agg_daily_sales", "agg_customer_daily", "agg_inventory_daily",
+      "fact_sales", "fact_inventory", "fact_equipment_performance", "fact_promotions",
+      "fact_customer_feedback",
+      "product_demand_features", "equipment_health_features", "production_batch_features")
+    val want = bronze.map("bronze" -> _) ++ silver.map("silver" -> _) ++ gold.map("gold" -> _)
+    assert(want.size === 29)
+    assert(reported === want.sorted)
+    val appendTables = bronze.take(4).map(t => s"bronze.$t") ++ silver.map(t => s"silver.$t")
+    assert(p.maintain().keySet === appendTables.toSet)
+  }
+
   private def freshWarehouse(): Warehouse =
     new Warehouse(spark, java.nio.file.Files.createTempDirectory("graft_wh_").toString)
 }

@@ -96,6 +96,31 @@ class WarehouseLayoutSpec extends AnyFunSuite {
     assert(w.load("bronze", "t").count() === 30L)
   }
 
+  test("a dated overwrite whose swap fails keeps the date for the next write to restore") {
+    val w = new Warehouse(spark, FaultyFs.freshRoot(spark))
+    w.overwrite(onDays(1, 2, 3), "bronze", "t")
+    // day 1 has no stage rows and is deleted on purpose; day 2's rows fail to swap in
+    FaultyFs.failingRenameTo(s"${w.path("bronze", "t")}/date=${day(2)}") {
+      intercept[java.io.IOException] {
+        w.overwrite(onDays(2).where(col("id") < 205), "bronze", "t", Seq(day(1), day(2)))
+      }
+    }
+    w.overwrite(onDays(4), "bronze", "t", Seq(day(4)))
+    assert(dates(w, "t") === Set(2, 3, 4).map(i => day(i).toString))
+    assert(w.load("bronze", "t").count() === 30L, "day 2 lost its rows")
+  }
+
+  test("a whole overwrite whose swap fails keeps the table for the next write to restore") {
+    val w = new Warehouse(spark, FaultyFs.freshRoot(spark))
+    w.overwrite(onDays(1, 2, 3), "bronze", "t")
+    FaultyFs.failingRenameTo(w.path("bronze", "t")) {
+      intercept[java.io.IOException](w.overwrite(onDays(5), "bronze", "t"))
+    }
+    w.overwrite(onDays(4), "bronze", "t", Seq(day(4)))
+    assert(dates(w, "t") === Set(1, 2, 3, 4).map(i => day(i).toString))
+    assert(w.load("bronze", "t").count() === 40L)
+  }
+
   test("after runAll every table loads with the inferred schema and no Spark job") {
     pipeline.initBronze(nSales = 1000, nInventory = 250, nEquipment = 500, nFeedback = 100)
     pipeline.runAll(java.sql.Date.valueOf("2025-06-20"))
