@@ -36,6 +36,9 @@ object GraftSession {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
+      // local files go through LocalFs: it sets file modes without forking
+      // a process per created file and directory
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
 
   def defaultCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)

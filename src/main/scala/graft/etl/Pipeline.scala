@@ -129,21 +129,21 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
   // each domain's facts and maintained daily aggregates rewrite its
   // pending dates; the aggregates read back the just-written fact
   private val factSales = gold("fact_sales", Some(silverSales), silverSales, dimProduct)(in =>
-    Some(SilverToGold.factSales(in.scoped(silverSales), in(dimProduct))))
+    in.scoped(silverSales).map(SilverToGold.factSales(_, in(dimProduct))))
   private val aggDailySales = gold("agg_daily_sales", Some(silverSales), factSales)(in =>
-    Some(SilverToGold.aggDailySales(in.scoped(factSales))))
+    in.scoped(factSales).map(SilverToGold.aggDailySales))
   private val aggCustomerDaily = gold("agg_customer_daily", Some(silverSales), silverSales)(in =>
-    Some(SilverToGold.aggCustomerDaily(in.scoped(silverSales))))
+    in.scoped(silverSales).map(SilverToGold.aggCustomerDaily))
   private val dimCustomer = gold("dim_customer", None, aggCustomerDaily)(in =>
     in.get(aggCustomerDaily).map(SilverToGold.dimCustomer))
   private val factInventory = gold("fact_inventory", Some(silverInventory), silverInventory)(in =>
-    Some(SilverToGold.factInventory(in.scoped(silverInventory))))
+    in.scoped(silverInventory).map(SilverToGold.factInventory))
   private val aggInventoryDaily = gold("agg_inventory_daily", Some(silverInventory), factInventory)(in =>
-    Some(SilverToGold.aggInventoryDaily(in.scoped(factInventory))))
+    in.scoped(factInventory).map(SilverToGold.aggInventoryDaily))
   private val factEquipment = gold("fact_equipment_performance", Some(silverEquipment), silverEquipment)(in =>
-    Some(SilverToGold.factEquipment(in.scoped(silverEquipment))))
+    in.scoped(silverEquipment).map(SilverToGold.factEquipment))
   private val factFeedback = gold("fact_customer_feedback", Some(silverFeedback), silverFeedback)(in =>
-    Some(SilverToGold.factCustomerFeedback(in.scoped(silverFeedback))))
+    in.scoped(silverFeedback).map(SilverToGold.factCustomerFeedback))
 
   // promo-grain fact + feature tables: rebuilt whole each cycle, but
   // every history-shaped input is a maintained daily-grain aggregate
@@ -369,13 +369,14 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
   }
 
   /** dim_calendar's spine bounds, or None when the spine needs no
-    * rewrite: the full path scans silver min/max; the incremental path
-    * extends the existing spine with the delta dates (no scan).
+    * rewrite: the full path scans silver min/max (None when silver holds
+    * no dated sale); the incremental path extends the existing spine with
+    * the delta dates (no scan).
     */
   private def calendarBounds(in: Inputs): Option[(String, String)] = {
     def silverBounds = {
       val r = in(silverSales).agg(min(col("date")), max(col("date"))).first()
-      Some((r.getDate(0).toString, r.getDate(1).toString))
+      Option(r.getDate(0)).map(lo => (lo.toString, r.getDate(1).toString))
     }
     in.dates(silverSales) match {
       case None => silverBounds
@@ -519,10 +520,11 @@ object Pipeline {
     /** An input cut to the build's scope: the domain's pending dates (literal `isin`, so the parquet scan
       * partition-prunes statically), or on the full rebuild every row that
       * has a date. Both leave out rows without a date: no pending date
-      * names them.
+      * names them. None when the input is absent, as a full rebuild leaves
+      * a fact whose domain has no dated row.
       */
-    def scoped(t: TableDef): DataFrame = dates(self.scope.get)
-      .fold(apply(t).where(col("date").isNotNull))(ds => apply(t).where(col("date").isin(ds: _*)))
+    def scoped(t: TableDef): Option[DataFrame] = get(t).map(df => dates(self.scope.get)
+      .fold(df.where(col("date").isNotNull))(ds => df.where(col("date").isin(ds: _*))))
   }
 
   /** Builds the gold entries of `registry` through `wh`, all at once on

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   */
 final class Warehouse(val spark: SparkSession, val root: String) {
 
-  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.{FileStatus, Path}
 
   def path(layer: String, table: String): String = s"$root/$layer/$table"
 
@@ -55,13 +55,15 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   }
 
   /** The schema Spark wrote into the footer of the table's first data
-    * file, read on the driver. Partition columns are not in it; the
-    * reader still discovers them from the directory names.
+    * file, read on the driver, plus the `date` partition column when that
+    * file lies in a `date=` directory. The column is typed here, not from
+    * the directory names: a table whose only partition is the null one
+    * (`date=__HIVE_DEFAULT_PARTITION__`) would otherwise read `date` as VOID.
     */
   private def footerSchema(target: Path): Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.types.{DataType, StructType}
+    import org.apache.spark.sql.types.{DataType, DateType, StructType}
     val conf = spark.sparkContext.hadoopConfiguration
     firstDataFile(target).flatMap { f =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
@@ -70,25 +72,31 @@ final class Warehouse(val spark: SparkSession, val root: String) {
           .get("org.apache.spark.sql.parquet.row.metadata")
         finally reader.close()
       Option(json).flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption).collect {
+        case s: StructType if f.getParent.getName.startsWith("date=") => s.add("date", DateType)
         case s: StructType => s
       }
     }
   }
 
-  /** First file in sorted path order that a parquet read would scan:
-    * names starting with `_` or `.` are skipped as Spark's listing skips
-    * them (`_SUCCESS`, `_temporary/`, checksums), except `_`-prefixed
-    * `k=v` partition directories.
+  /** First file in sorted path order that a parquet read would scan. */
+  private def firstDataFile(target: Path): Option[Path] = dataFiles(target).nextOption().map(_.getPath)
+
+  /** The files a parquet read of `target` would scan, in sorted path order,
+    * listed lazily one directory at a time: names starting with `_` or `.`
+    * are skipped as Spark's listing skips them (`_SUCCESS`, `_temporary/`,
+    * checksums), except `_`-prefixed `k=v` partition directories.
+    * `listStatus`, not `listFiles`, whose `LocatedFileStatus` reads each
+    * file's permission, which a local filesystem without `libhadoop` does
+    * by forking `ls -ld`.
     */
-  private def firstDataFile(target: Path): Option[Path] = {
+  private def dataFiles(target: Path): Iterator[FileStatus] = {
     val filesystem = fs(target)
     def visible(n: String) = !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".")
-    def first(dir: Path): Option[Path] =
+    def walk(dir: Path): Iterator[FileStatus] =
       filesystem.listStatus(dir).filter(st => visible(st.getPath.getName))
         .sortBy(_.getPath.getName).iterator
-        .flatMap(st => if (st.isDirectory) first(st.getPath) else Some(st.getPath))
-        .nextOption()
-    if (filesystem.exists(target)) first(target) else None
+        .flatMap(st => if (st.isDirectory) walk(st.getPath) else Iterator.single(st))
+    if (filesystem.exists(target)) walk(target) else Iterator.empty
   }
 
   /** Session catalog database backing this warehouse's BUCKETED tables
@@ -399,16 +407,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     if (exists(layer, table)) load(layer, table)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  private def parquetFiles(target: Path): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
-    val filesystem = fs(target)
-    val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
-    val it = filesystem.listFiles(target, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) out += f
-    }
-    out.toSeq
-  }
+  private def parquetFiles(target: Path): Seq[FileStatus] =
+    dataFiles(target).filter(_.getPath.getName.endsWith(".parquet")).toSeq
 
   /** Small-file compaction — the operational chore a streaming warehouse
     * cannot skip at 100 TB: every micro-batch appends a file per

@@ -2,15 +2,16 @@ package graft.etl
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The local file system under the `faulty://` scheme, whose `rename`
   * returns false, as a failed rename does, when its destination is the
   * path [[FaultyFs.failingRenameTo]] names. Spark's writers and
-  * [[Warehouse]] run over it unchanged.
+  * [[Warehouse]] run over it unchanged, and it sets file modes as the
+  * session's `file://` filesystem does, without forking `chmod`.
   */
-class FaultyFs extends RawLocalFileSystem {
+class FaultyFs extends graft.LocalFs.Raw {
   override def getUri: URI = FaultyFs.Uri
   override def getScheme: String = FaultyFs.Uri.getScheme
 

@@ -309,4 +309,29 @@ class IncrementalGoldSpec extends AnyFunSuite {
       assert(inc === full, s"gold/$t")
     }
   }
+
+  test("a warehouse whose every sale lacks a date runs a cycle, incremental and full " +
+      "writing the same gold tables") {
+    import org.apache.spark.sql.types.DateType
+    val whInc  = freshWarehouse()
+    val whFull = freshWarehouse()
+    val asOf   = java.sql.Date.valueOf("2025-06-20")
+    Seq(whInc -> true, whFull -> false).foreach { case (wh, inc) =>
+      val p = new Pipeline(wh)
+      p.initBronze(nSales = 0, nInventory = 100, nEquipment = 100, nFeedback = 50)
+      p.appendBronzeSales(Generators.salesEvents(spark, 5, idOffset = 7400000L)
+        .withColumn("event_time", lit(null).cast("timestamp"))
+        .withColumn("date", lit(null).cast("date")))
+      p.bronzeToSilver()
+      if (inc) p.silverToGoldIncremental(asOf) else p.silverToGold(asOf)
+    }
+    Seq(whInc, whFull).foreach { wh =>
+      assert(wh.load("bronze", "sales_events").schema("date").dataType === DateType)
+      assert(wh.load("silver", "sales_events").where(col("date").isNull).count() === 5)
+    }
+    val written = Seq(whInc, whFull).map(wh => goldTables.filter(wh.exists("gold", _)))
+    assert(written.head === written.last)
+    assert(written.head.contains("fact_inventory"), written.head)
+    assert(!written.head.contains("dim_calendar"), "a calendar spine with no dated sale")
+  }
 }
