@@ -37,8 +37,10 @@ object GraftSession {
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
       // local files go through LocalFs: it sets file modes without forking
-      // a process per created file and directory
+      // a process per created file and directory; FileContext (streaming
+      // checkpoints) gets the same through LocalFs.Fs
       .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFs.Fs].getName)
 
   def defaultCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)

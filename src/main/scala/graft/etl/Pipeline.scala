@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *
   * Stages run in order (bronze→silver, gate, gold, maintain, report):
   * each reads what the one before wrote, and compaction rewrites the
-  * bronze and silver partitions the report scans. Inside a stage the
+  * bronze and silver partitions the report counts. Inside a stage the
   * independent table builds overlap — the four silver domains, the gold
   * builds, the compactions — each on its own thread, so one table's
   * driver-side analysis, planning and codegen runs while another's tasks
@@ -324,20 +324,22 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
     * full-scanning silver each cycle; warehouses predating the aggregate
     * fall back to the scan once (the next bronzeToSilver cycle BACKFILLS
     * the state from all silver dates, so the average covers history).
+    * Returns the average, or NaN when silver holds no sale with a date:
+    * there is nothing to average, and the gate passes. (Such a silver
+    * leaves the aggregate without a data file, so the gate takes the scan.)
     */
   def qualityGate(threshold: Double = 50.0): Double = stage() {
-    val avgScore =
+    val r =
       if (wh.exists("silver", "agg_quality_daily"))
         wh.load("silver", "agg_quality_daily")
           .agg((sum(col("score_sum")) / sum(col("n"))).cast("double"))
           .first()
-          .getDouble(0)
       else
         load(silverSales).where(col("date").isNotNull)
           .agg(avg(col("data_quality_score")))
           .first()
-          .getDouble(0)
-    require(avgScore >= threshold,
+    val avgScore = if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
+    require(avgScore.isNaN || avgScore >= threshold,
       f"quality gate failed: avg sales quality $avgScore%.1f < $threshold%.1f")
     avgScore
   }
@@ -369,28 +371,22 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
   }
 
   /** dim_calendar's spine bounds, or None when the spine needs no
-    * rewrite: the full path scans silver min/max (None when silver holds
-    * no dated sale); the incremental path extends the existing spine with
-    * the delta dates (no scan).
+    * rewrite: the full path takes silver's least and greatest sale date
+    * (None when silver holds no dated sale); the incremental path extends
+    * the existing spine's bounds with the delta dates. Both bounds come
+    * from file footers ([[Inputs.dateSpan]]), so neither path runs a job.
     */
   private def calendarBounds(in: Inputs): Option[(String, String)] = {
-    def silverBounds = {
-      val r = in(silverSales).agg(min(col("date")), max(col("date"))).first()
-      Option(r.getDate(0)).map(lo => (lo.toString, r.getDate(1).toString))
-    }
+    def silverBounds = in.dateSpan(silverSales).map { case (lo, hi) => (lo.toString, hi.toString) }
     in.dates(silverSales) match {
       case None => silverBounds
       case Some(delta) =>
-        val cur = in.prior.map { cal =>
-          val r = cal.agg(min(col("date")), max(col("date"))).first()
-          (r.getDate(0), r.getDate(1))
-        }
-        (cur, delta) match {
+        (in.priorDateSpan, delta) match {
           case (None, Nil)          => None
           // no existing spine to extend (warehouse predating the
           // incremental build, or a dropped calendar): the delta's
           // dates may under-span silver history, so fall back to the
-          // full-path silver min/max scan rather than silently
+          // full-path silver bounds rather than silently
           // shrinking dim_calendar vs full-rebuild semantics
           case (None, _)            => silverBounds
           case (Some((lo, hi)), ds) =>
@@ -409,22 +405,19 @@ final class Pipeline private[graft] (callerWh: Warehouse, maxInterpretedBronzeBy
     stage()(wh.append(batch, bronzeSales.layer, bronzeSales.name))
 
   /** G2/G5 — count report across all layers (bakery_csv_etl_pipeline.py:
-    * 380-416): one scan of every existing registry table, tagged and
-    * counted in one aggregation, returned as a local frame sorted by
-    * (layer, table_name) with a 0 row for a table that exists but is empty.
+    * 380-416): every existing registry table's row count, summed from the
+    * record counts in its files' parquet footers ([[Warehouse.fileRows]]),
+    * as Iceberg answers `COUNT(*)` from its table metadata. The tables are
+    * counted one after another on the driver; no Spark job runs. Returned
+    * as a local frame sorted by (layer, table_name), with a 0 row for a
+    * table that exists but is empty.
     */
   def report(): DataFrame = stage() {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val present = registry.filter(exists)
-    val counts = present
-      .map(t => load(t).select(lit(t.layer).as("layer"), lit(t.name).as("table_name")))
-      .reduceOption(_ unionByName _)
-      .map(_.groupBy(col("layer"), col("table_name")).count().collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
-      .getOrElse(Map.empty)
-    val rows = present.map(t => (t.layer, t.name)).sorted.map { case (l, t) =>
-      Row(l, t, counts.getOrElse((l, t), 0L))
+    val rows = registry.map(t => (t.layer, t.name)).sorted.flatMap { case (l, t) =>
+      val files = wh.fileRows(l, t)
+      Option.when(files.nonEmpty)(Row(l, t, files.map(_.rows).sum))
     }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
       StructField("layer", StringType, nullable = false),
@@ -516,6 +509,18 @@ object Pipeline {
     def prior: Option[DataFrame] = open(self)
     def apply(t: TableDef): DataFrame = wh.load(declared(t).layer, t.name)
     def get(t: TableDef): Option[DataFrame] = open(declared(t))
+    /** The least and greatest `date` of an input's rows, from its files'
+      * footers with no job: the `date=` partitions whose files hold a row.
+      * The null partition does not count, nor does a partition without a
+      * data file. None when no row has a date.
+      */
+    def dateSpan(t: TableDef): Option[(java.sql.Date, java.sql.Date)] = span(declared(t))
+    /** [[dateSpan]] of the build's own table as the build found it. */
+    def priorDateSpan: Option[(java.sql.Date, java.sql.Date)] = span(self)
+    private def span(t: TableDef) = {
+      val dates = wh.fileRows(t.layer, t.name).filter(_.rows > 0).flatMap(_.date)
+      Option.when(dates.nonEmpty)((dates.minBy(_.getTime), dates.maxBy(_.getTime)))
+    }
     def dates(domain: Silver): Option[Seq[java.sql.Date]] = pending.map(_.getOrElse(domain.name, Nil))
     /** An input cut to the build's scope: the domain's pending dates (literal `isin`, so the parquet scan
       * partition-prunes statically), or on the full rebuild every row that

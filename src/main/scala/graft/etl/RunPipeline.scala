@@ -8,9 +8,10 @@ import org.apache.spark.graft.JobMeter
   * bronze→silver→gold with the quality gate, prints the count report.
   * `increment` instead appends a later sales window to an existing
   * warehouse and runs the same cycle over it. After the cycle one
-  * `[cycle]` line gives its jobs, the wall during which a job ran, the
-  * task time, the classes compiled and whether the cycle's last stage
-  * ran interpreted or compiled (see [[Pipeline]]).
+  * `[cycle]` line gives its jobs, its wall time, the wall during which a
+  * job ran (`busy`) and the rest (`driver`: planning, footer reads,
+  * commits), the task time, the classes compiled and whether the cycle's
+  * last stage ran interpreted or compiled (see [[Pipeline]]).
   *
   * Usage: runMain graft.etl.RunPipeline <warehouseDir> [nSales | <csv> | increment]
   */
@@ -39,9 +40,12 @@ object RunPipeline {
     }
     val meter = JobMeter(spark.sparkContext)
     meter.reset()
+    val t0     = System.nanoTime()
     val report = pipe.runAll(asOf)
+    val wallMs = (System.nanoTime() - t0) / 1000000L
     val cycle  = meter.read()
-    println(f"[cycle] jobs=${cycle.jobs.size} busy=${cycle.busyMs / 1e3}%.2f s " +
+    println(f"[cycle] jobs=${cycle.jobs.size} wall=${wallMs / 1e3}%.2f s " +
+      f"driver=${(wallMs - cycle.busyMs) / 1e3}%.2f s busy=${cycle.busyMs / 1e3}%.2f s " +
       f"taskSum=${cycle.taskMs / 1e3}%.2f s compiled=${cycle.compiledClasses} " +
       s"mode=${if (pipe.interpreted) "interpreted" else "compiled"}")
     report.show(50, truncate = false)

@@ -26,6 +26,8 @@ import org.apache.spark.sql.functions._
   */
 final class Warehouse(val spark: SparkSession, val root: String) {
 
+  import scala.jdk.CollectionConverters._
+
   import org.apache.hadoop.fs.{FileStatus, Path}
 
   def path(layer: String, table: String): String = s"$root/$layer/$table"
@@ -38,11 +40,11 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * the root can be local, hdfs:// or s3a:// alike.
     */
   def exists(layer: String, table: String): Boolean =
-    firstDataFile(new Path(path(layer, table))).isDefined
+    dataFiles(new Path(path(layer, table))).hasNext
 
   def load(layer: String, table: String): DataFrame = {
     val name = catalogName(layer, table)
-    if (catalogEntryExists(name)) spark.table(name)
+    if (catalogEntryExists(layer, table)) spark.table(name)
     else {
       val p = path(layer, table)
       footerSchema(new Path(p)) match {
@@ -61,25 +63,58 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * (`date=__HIVE_DEFAULT_PARTITION__`) would otherwise read `date` as VOID.
     */
   private def footerSchema(target: Path): Option[org.apache.spark.sql.types.StructType] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.types.{DataType, DateType, StructType}
-    val conf = spark.sparkContext.hadoopConfiguration
-    firstDataFile(target).flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      val json =
-        try reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata")
-        finally reader.close()
-      Option(json).flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption).collect {
-        case s: StructType if f.getParent.getName.startsWith("date=") => s.add("date", DateType)
+    dataFiles(target).nextOption().flatMap { f =>
+      val json = Option(footer(f).getKey_value_metadata).flatMap(_.asScala
+        .find(_.getKey == "org.apache.spark.sql.parquet.row.metadata")).flatMap(kv => Option(kv.getValue))
+      json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption).collect {
+        case s: StructType if f.getPath.getParent.getName.startsWith("date=") => s.add("date", DateType)
         case s: StructType => s
       }
     }
   }
 
-  /** First file in sorted path order that a parquet read would scan. */
-  private def firstDataFile(target: Path): Option[Path] = dataFiles(target).nextOption().map(_.getPath)
+  /** The footer of the parquet data file `file`, without its row groups:
+    * the file's row count (`num_rows`), schema and key-value metadata. The
+    * one footer reader of the warehouse. It opens the file through the
+    * session's Hadoop configuration (the one-argument
+    * `ParquetFileReader.open` builds a new `Configuration` per file, which
+    * costs far more than the read), reads the footer bytes in one call and
+    * decodes them skipping the row groups, whose per-column metadata
+    * neither a count nor a schema needs.
+    */
+  private def footer(file: FileStatus): org.apache.parquet.format.FileMetaData = {
+    import java.nio.{ByteBuffer, ByteOrder}
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromStatus(file, spark.sparkContext.hadoopConfiguration).newStream()
+    try {
+      // a footer ends the file: its length (4 bytes, little-endian), then "PAR1"
+      val tail = new Array[Byte](8)
+      in.seek(file.getLen - tail.length)
+      in.readFully(tail)
+      if (new String(tail, 4, 4, "US-ASCII") != "PAR1")
+        throw new java.io.IOException(s"${file.getPath} does not end in a plain parquet footer")
+      val bytes = new Array[Byte](ByteBuffer.wrap(tail, 0, 4).order(ByteOrder.LITTLE_ENDIAN).getInt)
+      in.seek(file.getLen - tail.length - bytes.length)
+      in.readFully(bytes)
+      org.apache.parquet.format.Util.readFileMetaData(new java.io.ByteArrayInputStream(bytes), true)
+    } finally in.close()
+  }
+
+  /** Every data file of a path-based table with the row count its parquet
+    * footer records, in sorted path order; empty when the table holds no
+    * data file. Like the record counts in an Iceberg manifest, it answers
+    * a table's row count, and the dates that hold rows, on the driver with
+    * no job: their sums equal what a scan of [[load]] counts. A bucketed
+    * catalog table is refused, as [[compact]] refuses one.
+    */
+  def fileRows(layer: String, table: String): Seq[Warehouse.FileRows] = {
+    require(!catalogEntryExists(layer, table),
+      s"$layer.$table is a bucketed catalog table; count it with a scan of load")
+    dataFiles(new Path(path(layer, table))).map(rowsOf).toSeq
+  }
+
+  private def rowsOf(f: FileStatus) = Warehouse.FileRows(f.getPath, f.getLen, footer(f).getNum_rows)
 
   /** The files a parquet read of `target` would scan, in sorted path order,
     * listed lazily one directory at a time: names starting with `_` or `.`
@@ -113,9 +148,16 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   private def catalogName(layer: String, table: String): String =
     s"$catalogDb.${layer}__$table"
 
-  private def catalogEntryExists(name: String): Boolean =
-    try spark.catalog.tableExists(name)
-    catch { case _: org.apache.spark.sql.AnalysisException => false }
+  /** True when this warehouse's catalog database holds `layer.table`: two
+    * session-catalog lookups, with no SQL parse and no exception thrown
+    * for a root without bucketed tables, the usual case (each `load` and
+    * write asks, and `catalog.tableExists` on a name costs milliseconds).
+    */
+  private def catalogEntryExists(layer: String, table: String): Boolean = {
+    val catalog = spark.sessionState.catalog
+    catalog.databaseExists(catalogDb) &&
+      catalog.tableExists(org.apache.spark.sql.catalyst.TableIdentifier(s"${layer}__$table", Some(catalogDb)))
+  }
 
   /** Path-based writes must not leave a stale catalog entry pointing at
     * files they are about to rewrite with a different layout (a bucketed
@@ -123,7 +165,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     */
   private def dropCatalogEntry(layer: String, table: String): Unit = {
     val name = catalogName(layer, table)
-    if (catalogEntryExists(name)) spark.sql(s"DROP TABLE $name")
+    if (catalogEntryExists(layer, table)) spark.sql(s"DROP TABLE $name")
   }
 
   /** Opt-in bucketed overwrite for fact tables: hash-bucketed (and
@@ -407,9 +449,6 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     if (exists(layer, table)) load(layer, table)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  private def parquetFiles(target: Path): Seq[FileStatus] =
-    dataFiles(target).filter(_.getPath.getName.endsWith(".parquet")).toSeq
-
   /** Small-file compaction — the operational chore a streaming warehouse
     * cannot skip at 100 TB: every micro-batch appends a file per
     * partition, and scan planning/open cost degrades with file COUNT
@@ -435,46 +474,64 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     // a bucketed catalog table rewritten through the path-based
     // overwrite would silently lose its bucket layout (and the
     // zero-shuffle join property that justified it) — refuse instead
-    require(!catalogEntryExists(catalogName(layer, table)),
+    require(!catalogEntryExists(layer, table),
       s"$layer.$table is a bucketed catalog table; re-bucket via overwriteBucketed instead of compact")
     val target = new Path(path(layer, table))
-    val before = parquetFiles(target)
+    val before = dataFiles(target).toSeq
     val df = load(layer, table)
 
-    // rows-per-file budget from measured density; the writer's
-    // maxRecordsPerFile split is deterministic (ceil(rows / budget) files
-    // per partition dir) where a hash-repartition file count is at the
-    // mercy of AQE coalescing and bucket collisions. A per-write option,
-    // not the session conf, so concurrent writers never see it.
-    def budget(bytes: Long, rows: Long): Map[String, String] = {
-      val avgRowBytes = math.max(1L, bytes / math.max(1L, rows))
+    // rows-per-file budget from measured density: the files' bytes and
+    // their footers' rows. The writer's maxRecordsPerFile split is
+    // deterministic (ceil(rows / budget) files per partition dir) where a
+    // hash-repartition file count is at the mercy of AQE coalescing and
+    // bucket collisions. A per-write option, not the session conf, so
+    // concurrent writers never see it.
+    def budget(files: Seq[FileStatus]): Map[String, String] = {
+      val rows        = files.map(rowsOf(_).rows).sum
+      val avgRowBytes = math.max(1L, files.map(_.getLen).sum / math.max(1L, rows))
       Map("maxRecordsPerFile" -> math.max(1L, targetBytes / avgRowBytes).toString)
     }
 
     if (df.columns.contains("date")) {
-      val byPart = before.groupBy(_.getPath.getParent.getName)
-      val needyDates = byPart.iterator.flatMap { case (dir, fs) =>
-        val bytes = fs.map(_.getLen).sum
-        val ideal = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-        val needy = fs.size > ideal || fs.exists(_.getLen > targetBytes + targetBytes / 2)
-        if (!needy) None
-        else
-          // skip non-date dirs (hive null-partition etc.) rather than guess
-          scala.util.Try(java.sql.Date.valueOf(dir.stripPrefix("date="))).toOption
-      }.toSeq
-      if (needyDates.nonEmpty) {
-        val needyDirs  = needyDates.map(d => s"date=$d").toSet
-        val needyBytes = byPart.collect { case (dir, fs) if needyDirs(dir) => fs.map(_.getLen).sum }.sum
-        val sub        = df.where(col("date").isin(needyDates: _*))
+      val needy = before.groupBy(_.getPath.getParent.getName).toSeq.flatMap { case (dir, fs) =>
+        val bytes      = fs.map(_.getLen).sum
+        val ideal      = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
+        val fragmented = fs.size > ideal || fs.exists(_.getLen > targetBytes + targetBytes / 2)
+        // skip non-date dirs (hive null-partition etc.) rather than guess
+        if (fragmented) Warehouse.partitionDate(dir).map(_ -> fs) else None
+      }
+      if (needy.nonEmpty) {
+        val needyDates = needy.map(_._1)
         // one task per needy day (AQE may merge small days — harmless:
         // the writer still splits by partition dir); the swap replaces
         // ONLY these partitions
-        replace(sub.repartition(col("date")), layer, table, Some(needyDates),
-          budget(needyBytes, sub.count()))
+        replace(df.where(col("date").isin(needyDates: _*)).repartition(col("date")), layer, table,
+          Some(needyDates), budget(needy.flatMap(_._2)))
       }
     } else {
-      replace(df.coalesce(1), layer, table, None, budget(before.map(_.getLen).sum, df.count()))
+      replace(df.coalesce(1), layer, table, None, budget(before))
     }
-    (before.size.toLong, parquetFiles(target).size.toLong)
+    (before.size.toLong, dataFiles(target).size.toLong)
   }
+}
+
+object Warehouse {
+
+  /** A data file of a table: its path, its length in bytes and the rows
+    * its parquet footer records.
+    */
+  final case class FileRows(path: org.apache.hadoop.fs.Path, bytes: Long, rows: Long) {
+
+    /** The date of the `date=` directory the file lies in; None outside
+      * one, and in the null partition (`date=__HIVE_DEFAULT_PARTITION__`).
+      */
+    def date: Option[java.sql.Date] = partitionDate(path.getParent.getName)
+  }
+
+  /** The date a `date=` directory name holds; None for any other name,
+    * the null partition included.
+    */
+  private def partitionDate(dir: String): Option[java.sql.Date] =
+    Option.when(dir.startsWith("date="))(dir.stripPrefix("date="))
+      .flatMap(d => scala.util.Try(java.sql.Date.valueOf(d)).toOption)
 }

@@ -334,4 +334,20 @@ class IncrementalGoldSpec extends AnyFunSuite {
     assert(written.head.contains("fact_inventory"), written.head)
     assert(!written.head.contains("dim_calendar"), "a calendar spine with no dated sale")
   }
+
+  test("a warehouse whose every sale lacks a date runs a whole cycle, the gate passing with " +
+      "nothing to average") {
+    val wh = freshWarehouse()
+    val p  = new Pipeline(wh)
+    p.initBronze(nSales = 0, nInventory = 100, nEquipment = 100, nFeedback = 50)
+    p.appendBronzeSales(Generators.salesEvents(spark, 5, idOffset = 7400000L)
+      .withColumn("event_time", lit(null).cast("timestamp"))
+      .withColumn("date", lit(null).cast("date")))
+    val report = p.runAll(java.sql.Date.valueOf("2025-06-20")).collect()
+      .map(r => s"${r.getString(0)}.${r.getString(1)}" -> r.getLong(2)).toMap
+    assert(p.qualityGate().isNaN)
+    assert(report("silver.sales_events") === 5L)
+    assert(!report.contains("gold.fact_sales"), "a sales fact from no dated sale")
+    assert(report("gold.fact_inventory") === wh.load("gold", "fact_inventory").count())
+  }
 }

@@ -26,12 +26,12 @@ class NoForkSpec extends AnyFunSuite {
     Option(e.getStackTrace).exists(_.getFrames.asScala
       .exists(_.getMethod.getType.getName.startsWith("org.apache.spark.sql.artifact.ArtifactManager")))
 
-  test("a medallion cycle, compaction of every append table included, starts no process") {
-    val wh = new Warehouse(spark, Files.createTempDirectory("graft_nofork_").toString)
-    val p  = new Pipeline(wh)
-    p.initBronze(nSales = 300, nInventory = 100, nEquipment = 100, nFeedback = 50)
+  /** The commands of the processes started while `body` ran, less the
+    * session cleanups above.
+    */
+  private def processStarts(body: => Unit): Seq[String] = {
     // Spark's executor heartbeat forks `getconf PAGESIZE` once per JVM, on
-    // its first metrics poll, whenever that falls; take it before the cycle
+    // its first metrics poll, whenever that falls; take it before `body`
     Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
     val file = Files.createTempFile("graft_nofork_", ".jfr")
     val rec  = new Recording()
@@ -39,16 +39,51 @@ class NoForkSpec extends AnyFunSuite {
       rec.enable("jdk.ProcessStart").withStackTrace()
       rec.setDestination(file)
       rec.start()
-      try p.runAll(java.sql.Date.valueOf("2025-06-20"))
+      try body
       finally rec.stop()
     } finally rec.close()
     val commands = RecordingFile.readAllEvents(file).asScala.filterNot(sessionCleanup)
       .map(_.getString("command")).toSeq
     Files.delete(file)
-    // one line per program and first argument (`chmod 0644`), then a few whole commands
+    commands
+  }
+
+  /** Fails listing `commands`: one line per program and first argument
+    * (`chmod 0644`), then a few whole commands.
+    */
+  private def assertNone(commands: Seq[String]): Unit =
     if (commands.nonEmpty) fail(s"${commands.size} process starts:\n" +
       commands.groupBy(_.split(" ").take(2).mkString(" ")).toSeq.sortBy(-_._2.size)
         .map { case (c, cs) => s"${cs.size} x $c" }.mkString("\n") +
       commands.take(5).mkString("\ne.g. ", "\ne.g. ", ""))
+
+  test("a medallion cycle, compaction of every append table included, starts no process") {
+    val wh = new Warehouse(spark, Files.createTempDirectory("graft_nofork_").toString)
+    val p  = new Pipeline(wh)
+    p.initBronze(nSales = 300, nInventory = 100, nEquipment = 100, nFeedback = 50)
+    assertNone(processStarts(p.runAll(java.sql.Date.valueOf("2025-06-20"))))
+  }
+
+  test("a streaming query that writes a checkpoint starts no process") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val checkpoint = Files.createTempDirectory("graft_nofork_ckpt_")
+    val input      = MemoryStream[Int]
+    val query = input.toDF().writeStream.format("memory").queryName("graft_nofork_stream")
+      .option("checkpointLocation", checkpoint.toString).start()
+    try {
+      // each batch writes its offsets, then its commit, through FileContext:
+      // a temp file per entry, renamed into place
+      val commands = processStarts {
+        Seq(1 to 10, 11 to 20).foreach { rows =>
+          input.addData(rows)
+          query.processAllAvailable()
+        }
+      }
+      assert(spark.table("graft_nofork_stream").count() === 20)
+      assert(Files.exists(checkpoint.resolve("commits/1")), "the query committed no second batch")
+      assertNone(commands)
+    } finally query.stop()
   }
 }
